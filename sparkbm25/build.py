@@ -44,8 +44,7 @@ faiss_index_build_service.py:165-238):
       doc_stats/group=G/               (doc_id, doc_len [, text])
       postings/group=G/term_bucket=B/shard_id=S/   block rows
                                        (BLOCK_SCHEMA; posting layout 2 —
-                                       shard-clustered files; layout-1
-                                       indexes lack the shard_id level)
+                                       shard-clustered files)
       term_stats/                      (term, df, cf, max_tf_norm)
 """
 
@@ -83,6 +82,31 @@ BLOCK_SCHEMA = (
     "sum_tf long, max_tf long, min_tf long, min_dl long, max_dl long, "
     "docs_vbyte binary, tfs_vbyte binary, dls_vbyte binary, pos_vbyte binary"
 )
+
+
+def binary_from_segments(buf: np.ndarray, val_sizes: np.ndarray,
+                         seg_starts: np.ndarray) -> "pa.Array":
+    """BinaryArray over one encoded buffer cut into segments: value i
+    takes ``val_sizes[i]`` bytes of ``buf`` and segment j starts at value
+    ``seg_starts[j]``. The offsets index ``buf`` directly (no bytes object
+    per segment). Arrow binary offsets are int32, so a buffer past
+    2**31 - 1 bytes raises instead of wrapping into corrupt offsets."""
+    import pyarrow as pa
+
+    seg_bytes = np.add.reduceat(val_sizes, seg_starts)
+    ends = np.cumsum(seg_bytes, dtype=np.int64)
+    if len(ends) and ends[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"{int(ends[-1])} encoded bytes exceed the int32 offsets of an "
+            "Arrow binary column; split the batch (smaller Arrow batches "
+            "or more partitions)"
+        )
+    offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
+    offsets[1:] = ends
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), len(seg_bytes),
+        [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
+    )
 
 
 @dataclass
@@ -293,16 +317,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
         from .analysis import tokenize_flat_arrow
         from .codecs import vbyte_encode_arrays
 
-        def bin_col(buf: np.ndarray, val_sizes: np.ndarray,
-                    run_starts_post: np.ndarray) -> pa.Array:
-            seg_bytes = np.add.reduceat(val_sizes, run_starts_post)
-            offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(seg_bytes)
-            return pa.BinaryArray.from_buffers(
-                pa.binary(), len(seg_bytes),
-                [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-            )
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -355,9 +369,9 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     uniq_sorted.take(pa.array(post_tcode[starts])),
                     pa.array(shards[starts], type=pa.int64()),
                     pa.array(lens.astype(np.int32), type=pa.int32()),
-                    bin_col(docs_buf, docs_sz, starts),
-                    bin_col(tfs_buf, tfs_sz, starts),
-                    bin_col(dls_buf, dls_sz, starts),
+                    binary_from_segments(docs_buf, docs_sz, starts),
+                    binary_from_segments(tfs_buf, tfs_sz, starts),
+                    binary_from_segments(dls_buf, dls_sz, starts),
                     pa.nulls(n_runs, pa.binary()),
                 ],
                 names=[
@@ -377,16 +391,6 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
 
         from .analysis import tokenize_flat_arrow
         from .codecs import vbyte_encode_arrays
-
-        def bin_col(buf: np.ndarray, val_sizes: np.ndarray,
-                    seg_starts: np.ndarray) -> pa.Array:
-            seg_bytes = np.add.reduceat(val_sizes, seg_starts)
-            offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(seg_bytes)
-            return pa.BinaryArray.from_buffers(
-                pa.binary(), len(seg_bytes),
-                [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-            )
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -452,10 +456,10 @@ def _make_runs_gen(shard_shift: int, store_positions: bool = False):
                     uniq_sorted.take(pa.array(post_tcode[r_starts])),
                     pa.array(post_shard[r_starts], type=pa.int64()),
                     pa.array(r_lens.astype(np.int32), type=pa.int32()),
-                    bin_col(docs_buf, docs_sz, r_starts),
-                    bin_col(tfs_buf, tfs_sz, r_starts),
-                    bin_col(dls_buf, dls_sz, r_starts),
-                    bin_col(pos_buf, pos_sz, tok_run_starts),
+                    binary_from_segments(docs_buf, docs_sz, r_starts),
+                    binary_from_segments(tfs_buf, tfs_sz, r_starts),
+                    binary_from_segments(dls_buf, dls_sz, r_starts),
+                    binary_from_segments(pos_buf, pos_sz, tok_run_starts),
                 ],
                 names=[
                     "term", "shard_id", "n_docs",
@@ -517,18 +521,6 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
         data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None \
             else np.zeros(0, dtype=np.uint8)
         return data[offs[0]:offs[-1]], np.diff(offs)
-
-    def _block_bin(buf: np.ndarray, val_sizes: np.ndarray,
-                   seg_starts: np.ndarray) -> "pa.Array":
-        """BinaryArray over ``buf`` sliced at segment starts (the stage-1
-        bin_col pattern): offsets index the single encoded buffer."""
-        seg_bytes = np.add.reduceat(val_sizes, seg_starts)
-        offsets = np.zeros(len(seg_bytes) + 1, dtype=np.int32)
-        offsets[1:] = np.cumsum(seg_bytes)
-        return pa.BinaryArray.from_buffers(
-            pa.binary(), len(seg_bytes),
-            [None, pa.py_buffer(offsets), pa.py_buffer(buf)],
-        )
 
     def _flush_vectorized(n_rows: int, terms, shards, lens,
                           docs_all, tfs_all, dls_all,
@@ -614,7 +606,9 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
             pos_sorted = pos_all[np.repeat(old_tok_starts[order], c_p) + within]
             pos_gaps = segment_delta_gaps(pos_sorted, new_tok_starts)
             pos_buf, pos_sz = vbyte_encode_arrays(pos_gaps)
-            pos_col = _block_bin(pos_buf, pos_sz, new_tok_starts[b_starts])
+            pos_col = binary_from_segments(
+                pos_buf, pos_sz, new_tok_starts[b_starts]
+            )
         else:
             pos_col = pa.nulls(len(b_starts), pa.binary())
         return pa.RecordBatch.from_arrays(
@@ -632,9 +626,9 @@ def _make_merge_gen(params: BuildParams, avgdl: float,
                 pa.array(np.minimum.reduceat(t_, b_starts), type=pa.int64()),
                 pa.array(np.minimum.reduceat(l_, b_starts), type=pa.int64()),
                 pa.array(np.maximum.reduceat(l_, b_starts), type=pa.int64()),
-                _block_bin(docs_buf, docs_sz, b_starts),
-                _block_bin(tfs_buf, tfs_sz, b_starts),
-                _block_bin(dls_buf, dls_sz, b_starts),
+                binary_from_segments(docs_buf, docs_sz, b_starts),
+                binary_from_segments(tfs_buf, tfs_sz, b_starts),
+                binary_from_segments(dls_buf, dls_sz, b_starts),
                 pos_col,
             ],
             names=_BLOCK_COLS,
@@ -781,22 +775,17 @@ def build_postings(
 # directory level under each term_bucket: group=G/term_bucket=B/shard_id=S/
 # — shard-CLUSTERED files, so a search task can read exactly its shard's
 # blocks straight from shared storage (index_query's direct route: no
-# scan->kernel exchange, no JVM->Python Arrow hop). Layout 1 indexes keep
-# working through the exchange route; appends into them stay layout 1
-# (mixed directory depths would break Spark partition discovery), and
-# compaction rewrites the whole tree so it upgrades to 2.
+# scan->kernel exchange, no JVM->Python Arrow hop). It is the only layout
+# readers handle (jobs.Index refuses layout 1, term_bucket dirs only);
+# streaming.compact_index rewrites a layout-1 tree into it.
 POSTING_LAYOUT = 2
 
 
-def write_group_blocks(
-    blocks: DataFrame, dest: str, layout: int = POSTING_LAYOUT,
-    mode: str = "overwrite",
-) -> None:
-    """Write one lineage group's block rows under the given layout."""
-    cols = (
-        ["term_bucket", "shard_id"] if layout >= 2 else ["term_bucket"]
-    )
-    blocks.write.partitionBy(*cols).mode(mode).parquet(dest)
+def write_group_blocks(blocks: DataFrame, dest: str) -> None:
+    """Write one lineage group's block rows, shard-clustered."""
+    blocks.write.partitionBy("term_bucket", "shard_id").mode(
+        "overwrite"
+    ).parquet(dest)
 
 
 def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:

@@ -253,14 +253,12 @@ def _matched_agg_plan(
     histogram / stats): tokenize + merge dup query ids, build the
     attribute side (doc_id, shard_id, value, kind, seq) from live
     filtered doc_stats with ``value_col`` as the value expression,
-    route it side-grouped-direct on layout-2 (blocks pyarrow-read
-    in-task) or cogrouped-exchange otherwise, and return (partials
+    route it side-grouped-direct (blocks pyarrow-read in-task) or, under
+    direct=False, cogrouped-exchange, and return (partials
     DataFrame | None, empty DataFrame). ``drop_null_value`` excludes
     NULL attribute values from the side (ES histogram/stats ignore
     docs missing the field; facets keep a NULL bucket)."""
     spark = ix.spark
-    if ix.shard_shift is None:
-        raise ValueError("aggregations need the doc-range shard layout")
     from .index_query import filtered_live_stats
     from .jobs import TOMBSTONE_BROADCAST_MAX
     from .xxhash64 import spark_pmod_bucket
@@ -316,13 +314,7 @@ def _matched_agg_plan(
         )
     side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
     kern = kern_factory(q_tokens, tomb)
-    use_direct = direct is not False and ix.posting_layout >= 2
-    if direct and not use_direct:
-        raise ValueError(
-            "direct=True is not serviceable: posting layout < 2 "
-            "(rebuild or compact_index first)"
-        )
-    if use_direct:
+    if direct is not False:
         from .index_query import _direct_side_fn
 
         partials = side.groupBy("shard_id").applyInPandas(
@@ -367,7 +359,7 @@ def index_histogram(
     NULL attribute are ignored, the ES missing-field default). Matching
     semantics, filters, routing, tombstones: exactly index_facets — the
     facet kernel runs unchanged over a bucket-valued side, so the plan
-    exchanges only the (doc_id, bucket) side on layout-2 indexes.
+    exchanges only the (doc_id, bucket) side.
 
     Reference analog: the reference service exposes no aggregations
     (SURVEY §2.5 widening, like facets); semantics follow OpenSearch's
@@ -503,17 +495,15 @@ def index_facets(
     (BuildParams(attr_cols=(by, ...))). A query with no corpus-present
     token yields no rows.
 
-    On a layout-2 index the kernel rides the SIDE-GROUPED direct plan by
+    The kernel rides the SIDE-GROUPED direct plan by
     default (r06): only the attribute side is exchanged (grouped on the
     shard key); each task pyarrow-reads its shard's posting blocks
     in-task (index_query._direct_side_fn), so the blocks never shuffle.
     Exact: every live doc has an attribute row, so a shard absent from
-    the side has nothing countable. ``direct`` mirrors index_search
-    (None auto, False forces the cogrouped exchange, True refuses on
-    layout-1); results are bit-identical across plans (same kernel)."""
+    the side has nothing countable. ``direct=False`` forces the
+    cogrouped exchange; results are bit-identical across plans (same
+    kernel)."""
     spark = ix.spark
-    if ix.shard_shift is None:
-        raise ValueError("facets need the doc-range shard layout")
     # late imports: TOMBSTONE_BROADCAST_MAX must be read at call time
     # (tests lower it to force the distributed path), and the where=
     # contract is the one filtered search uses — shared helper
@@ -581,13 +571,7 @@ def index_facets(
         )
     side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
     kern = _facet_count_fn(q_tokens, tombstones=tomb)
-    use_direct = direct is not False and ix.posting_layout >= 2
-    if direct and not use_direct:
-        raise ValueError(
-            "direct=True is not serviceable: posting layout < 2 "
-            "(rebuild or compact_index first)"
-        )
-    if use_direct:
+    if direct is not False:
         from .index_query import _direct_side_fn
 
         partials = side.groupBy("shard_id").applyInPandas(

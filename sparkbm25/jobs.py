@@ -40,6 +40,7 @@ from .catalog import CasConflict, get_catalog
 from .localrel import local_df
 
 from .build import (
+    POSTING_LAYOUT,
     BuildParams,
     CorpusStats,
     StageTimer,
@@ -493,10 +494,11 @@ def _build_index_locked(
         _cas_publish(index_dir, m, token)
     else:
         b = m["build"]
-        if "shard_shift" not in b:
+        if int(b.get("posting_layout", 1)) < POSTING_LAYOUT:
             raise ValueError(
-                "manifest predates the shard_shift layout (engine < 0.2); "
-                "rebuild the index with the current engine"
+                "manifest of an unfinished build predates the shard-"
+                "clustered posting layout (engine < 0.8); rebuild the "
+                "index into an empty directory with the current engine"
             )
         stats = CorpusStats(
             n_docs=b["n_docs"], avgdl=b["avgdl"], min_doc=b["min_doc"],
@@ -564,13 +566,7 @@ def _build_index_locked(
                 r_stage = os.path.join(staging, "runs", f"group={g}")
                 blocks = build_postings(sub, params, stats,
                                         spill_dir=r_stage)
-                # resumed pre-0.8 builds keep their layout-1 tree: mixed
-                # directory depths break Spark partition discovery (fresh
-                # manifests record POSTING_LAYOUT via params_dict)
-                write_group_blocks(
-                    blocks, g_stage,
-                    layout=int(m["build"].get("posting_layout", 1)),
-                )
+                write_group_blocks(blocks, g_stage)
                 shutil.rmtree(r_stage, ignore_errors=True)
             # publish gate: only the claim holder may move staged output
             # into the artifact and update the manifest
@@ -659,6 +655,24 @@ def _build_index_locked(
     return m
 
 
+def _readable_build(index_dir: str, manifest: dict) -> dict:
+    """The manifest's build record, once its postings are in the one
+    layout every reader handles: shard-clustered files
+    (group=G/term_bucket=B/shard_id=S/, build.POSTING_LAYOUT). A pre-0.8
+    manifest has no posting_layout key (layout 1); compact_index reads
+    any layout and rewrites the tree, so it is the upgrade path."""
+    b = manifest["build"]
+    layout = int(b.get("posting_layout", 1))
+    if layout < POSTING_LAYOUT:
+        raise ValueError(
+            f"index at {index_dir} has posting layout {layout} (engine < "
+            f"0.8); readers need layout {POSTING_LAYOUT} — run "
+            "sparkbm25.streaming.compact_index(spark, index_dir) once to "
+            "rewrite its postings, then open it again"
+        )
+    return b
+
+
 class Index:
     """Handle over a built index directory (the query engine's input)."""
 
@@ -672,22 +686,15 @@ class Index:
                 f"index at {index_dir} is {self.manifest['status']}, not COMPLETED"
             )
         self.spark = spark
-        b = self.manifest["build"]
+        b = _readable_build(index_dir, self.manifest)
         self.n_docs: int = b["n_docs"]
         self.avgdl: float = b["avgdl"]
         self.k1: float = b["k1"]
         self.b: float = b["b"]
         self.num_term_buckets: int = b["num_term_buckets"]
-        # lenient reads: a pre-0.2 manifest (no shard_shift) must still
-        # open for the plan-level strategies; the sharded/blockmax path
-        # raises its own descriptive error when these are missing
-        self.num_shards: int = b.get("num_shards", 8)  # BuildParams default
-        self.shard_shift: int | None = b.get("shard_shift")
-        self.block_size: int = b.get("block_size", 128)
-        # physical postings layout generation (build.POSTING_LAYOUT):
-        # >= 2 means shard-clustered files, eligible for the direct
-        # (no-exchange) search route; pre-0.8 indexes report 1
-        self.posting_layout: int = int(b.get("posting_layout", 1))
+        self.num_shards: int = b["num_shards"]
+        self.shard_shift: int = b["shard_shift"]
+        self.block_size: int = b["block_size"]
         self._bucket_files: dict[int, dict[int, list[tuple[int, str]]]] = {}
         self._dfs: dict[str, DataFrame] = {}
         self._stats_cache: dict[str, tuple[int, float] | None] = {}
@@ -879,10 +886,9 @@ class Index:
         # _read_blocks_meta_cached): same immutable-artifact contract
         self._pq_meta = {}
         self.manifest = read_manifest(self.index_dir)
-        b = self.manifest["build"]
+        b = _readable_build(self.index_dir, self.manifest)
         self.n_docs = b["n_docs"]
         self.avgdl = b["avgdl"]
-        self.posting_layout = int(b.get("posting_layout", 1))
         return self
 
     def postings(self) -> DataFrame:
@@ -910,7 +916,7 @@ class Index:
     def shard_file_map(
         self, buckets: "list[int] | None" = None
     ) -> dict[int, list[tuple[int, str]]]:
-        """{shard_id: [(group_seq, file_path), ...]} for layout-2 postings,
+        """{shard_id: [(group_seq, file_path), ...]} for the postings,
         restricted to the given term_bucket dirs (None = all buckets).
 
         This is the DIRECT search route's work-item source: each search
@@ -922,11 +928,6 @@ class Index:
         the stats cache)."""
         import glob
 
-        if self.posting_layout < 2:
-            raise ValueError(
-                "shard_file_map needs posting layout >= 2 (engine >= "
-                "0.8); rebuild or compact this index first"
-            )
         if buckets is None:
             buckets = list(range(self.num_term_buckets))
         seq_of = {

@@ -14,7 +14,7 @@ Two costs follow (measured r07 on the bench host):
 - steady-state: each action pays a JVM->python->JVM round trip to scan a
   frame of a few hundred bytes.
 
-Converting through pandas + Arrow instead yields a true ``LocalRelation``:
+Converting through an Arrow table instead yields a true ``LocalRelation``:
 pure JVM, zero python workers, and the optimizer sees concrete rows (so
 broadcast-size estimation is exact). Values round-trip through Arrow
 without a text detour, so doubles stay bit-identical.
@@ -22,35 +22,23 @@ without a text detour, so doubles stay bit-identical.
 
 from __future__ import annotations
 
-import pandas as pd
-
-
-def _ddl_names(schema: str) -> list[str]:
-    """Top-level field names of a DDL schema string ("a int, b map<k,v>"):
-    split on commas outside <...> nesting, take the leading identifier."""
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(schema + ","):
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            field = schema[start:i].strip()
-            if field:
-                names.append(field.split()[0])
-            start = i + 1
-    return names
-
 
 def local_df(spark, rows, schema: str):
     """Small driver-local DataFrame from ``rows`` (iterable of tuples)
-    under a DDL ``schema`` string, built as a JVM LocalRelation via the
-    pandas/Arrow path. Falls back to the classic row path if the pandas
-    conversion rejects the values (never the other way: the classic path
-    accepts everything pandas does)."""
-    rows = list(rows)
-    try:
-        pdf = pd.DataFrame.from_records(rows, columns=_ddl_names(schema))
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    under a DDL ``schema`` string, built as a JVM LocalRelation from a
+    ``pyarrow.Table`` typed by that schema. Each column converts straight
+    from the Python values to its declared Arrow type, so a nullable long
+    stays an exact int64 (a pandas frame would widen it to float64 and
+    round values past 2**53); a value the type cannot hold raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)

@@ -38,7 +38,7 @@ from .build import (
     term_stats_from_blocks,
     write_group_blocks,
 )
-from .jobs import read_manifest, _write_manifest
+from .jobs import _readable_build, read_manifest, _write_manifest
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -88,6 +88,9 @@ def append_batch(
         m = read_manifest(index_dir)
         if m is None:
             raise FileNotFoundError(f"no base index manifest at {index_dir}")
+        # appended files must match the tree's layout (mixed directory
+        # depths break Spark partition discovery)
+        _readable_build(index_dir, m)
         params, stats = _stats_from_manifest(m)
         g = f"stream_{epoch_id}"
         prior = m["completed_groups"].get(g)
@@ -111,13 +114,7 @@ def append_batch(
             blocks = build_postings(
                 corpus_batch, params, stats, spill_dir=r_tmp
             )
-            # match the INDEX's existing layout: shard-dir files appended
-            # into a layout-1 tree would give heterogeneous partition
-            # depths, which Spark's partition discovery rejects;
-            # compaction upgrades
-            write_group_blocks(
-                blocks, gdir, layout=int(m["build"].get("posting_layout", 1))
-            )
+            write_group_blocks(blocks, gdir)
         finally:
             # failed epochs must not leak spill dirs under index_dir
             shutil.rmtree(r_tmp, ignore_errors=True)
@@ -637,9 +634,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 F.pmod(F.xxhash64("term"), F.lit(params.num_term_buckets)),
             )
         )
-        # compaction rewrites the WHOLE postings tree, so it always writes
-        # (and the manifest below records) the current layout — a layout-1
-        # index upgrades to the shard-clustered layout here
+        # compaction rewrites the WHOLE postings tree (read through
+        # spark.read.parquet, any layout), so it always writes and the
+        # manifest below records the current layout — the upgrade path
+        # for a pre-0.8 (layout-1) index, which Index refuses to open
         write_group_blocks(
             new_blocks, os.path.join(sdir, "postings", "group=compacted")
         )

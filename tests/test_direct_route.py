@@ -6,8 +6,9 @@ hop costs ~0.9 s per batch nearly independent of core count (measured
 0.90 s at local[8] vs 1.13 s at local[2] on a 2.2M-turn index) — the
 fixed term that capped q100 batch-scaling efficiency at ~0.70 (VERDICT
 r04 #4). Contract pinned here: bit-exact identity with the exchange
-route (same kernel, same fold), one Exchange total in the plan, and
-descriptive refusals/fallbacks for the exchange-only variants.
+route (same kernel, same fold), one Exchange total in the plan,
+descriptive refusals/fallbacks for the exchange-only variants, and the
+upgrade path for a pre-0.8 (layout-1) index: refused until compacted.
 """
 
 import pytest
@@ -44,7 +45,7 @@ def _rows(df):
 
 
 def test_direct_is_default_and_bit_exact(built):
-    assert built.posting_layout >= 2
+    assert built.manifest["build"]["posting_layout"] == 2
     d = _rows(index_search(built, QS, k=8))            # auto -> direct
     e = _rows(index_search(built, QS, k=8, direct=False))
     assert d == e and len(d) > 0
@@ -119,15 +120,82 @@ def test_direct_blockmax_tuned_bit_exact(built):
     assert d == e and len(d) > 0
 
 
-def test_layout1_index_falls_back_and_refuses_direct(built, spark):
-    ix = Index(spark, built.index_dir)
-    ix.posting_layout = 1  # simulate a pre-0.8 manifest
-    df = index_search(ix, QS[:5], k=8)  # auto: exchange route, still right
-    assert _rows(df) == _rows(index_search(built, QS[:5], k=8))
-    with pytest.raises(ValueError, match="posting layout"):
-        index_search(ix, QS[:2], k=5, direct=True)
-    with pytest.raises(ValueError, match="posting layout|shard_file_map"):
-        ix.shard_file_map()
+def test_layout1_index_refused_until_compacted(spark, tmp_path):
+    """A pre-0.8 index (postings partitioned by term_bucket only, no
+    posting_layout key in its manifest) is refused with a pointer to
+    compact_index; compaction rewrites it into the shard-clustered
+    layout, after which it answers bit-identically to the index it was
+    made from on every route and on phrase search."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sparkbm25.analysis import tokenize_py
+    from sparkbm25.index_query import index_phrase_search
+    from sparkbm25.jobs import _write_manifest, read_manifest
+    from sparkbm25.streaming import append_batch, compact_index
+
+    corpus = add_doc_id(
+        spark.createDataFrame(make_transcripts_pdf(30)), "conv_seq"
+    ).select("doc_id", "text")
+    d = str(tmp_path / "ix")
+    build_index(
+        corpus, d,
+        BuildParams(num_shards=4, salt_factor=2, num_term_buckets=4,
+                    lineage_groups=2, doc_id_scheme="conv_seq",
+                    store_positions=True),
+        "layout1",
+    )
+    phrases = [
+        (i, " ".join(tokenize_py(r.text)[1:3]))
+        for i, r in enumerate(corpus.orderBy("doc_id").limit(40).collect())
+        if len(tokenize_py(r.text)) >= 3
+    ]
+
+    def answers(ix):
+        return (
+            _rows(index_search(ix, QS[:2], k=8)),       # driver-local
+            _rows(index_search(ix, QS, k=8)),           # direct
+            _rows(index_search(ix, QS, k=8, direct=False)),  # exchange
+            _rows(index_phrase_search(ix, phrases, k=8)),
+            _rows(index_phrase_search(ix, phrases, k=8, direct=False)),
+        )
+
+    old_ix = Index(spark, d)
+    want = answers(old_ix)
+    assert all(want)
+
+    # rewrite each group as a real layout-1 tree: term_bucket dirs only,
+    # shard_id back as a data column, no posting_layout in the manifest
+    pdir = os.path.join(d, "postings")
+    for g in sorted(os.listdir(pdir)):
+        gdir = os.path.join(pdir, g)
+        stage = str(tmp_path / f"l1_{g}")
+        blocks = spark.read.parquet(gdir)
+        blocks.withColumn("shard_id", F.col("shard_id").cast("long")) \
+            .write.partitionBy("term_bucket").parquet(stage)
+        shutil.rmtree(gdir)
+        shutil.move(stage, gdir)
+    assert not glob.glob(os.path.join(pdir, "*", "*", "shard_id=*"))
+    m = read_manifest(d)
+    del m["build"]["posting_layout"]
+    _write_manifest(d, m)
+
+    with pytest.raises(ValueError, match="compact_index"):
+        Index(spark, d)
+    with pytest.raises(ValueError, match="compact_index"):
+        old_ix.refresh()
+    # an append would mix directory depths into the tree it must upgrade
+    with pytest.raises(ValueError, match="compact_index"):
+        append_batch(corpus.limit(3), d, epoch_id=1)
+
+    compact_index(spark, d)
+    ix = Index(spark, d)
+    assert ix.manifest["build"]["posting_layout"] == 2
+    assert glob.glob(os.path.join(pdir, "*", "*", "shard_id=*"))
+    assert answers(ix) == want
 
 
 def test_shard_file_map_shape_and_cache(built):

@@ -99,7 +99,7 @@ def test_index_search_rank_identical_all_strategies(spark, built, oracle):
     ix = Index(spark, d)
     queries = make_queries(40)
     want = oracle.search_all(queries, k=K)
-    for strategy in ("sharded", "blockmax", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = index_search(ix, queries, k=K, strategy=strategy).collect()
         _assert_rank_identical(got, want)
 
@@ -391,16 +391,15 @@ def test_index_search_where_expr_range(spark, tmp_path):
 
 def test_index_search_query_time_k1_b_override(spark, built, oracle):
     """k1/b overridden at query time (no rebuild) must be rank-identical
-    to the oracle scored with the same parameters, for ALL strategies —
+    to the oracle scored with the same parameters, for both strategies —
     blockmax derives sound pruning bounds for the effective (k1, b) from
-    the raw per-block (max_tf, min_tf, min_dl, max_dl) metadata; only the
-    legacy blockmax_plan cross-check path refuses."""
+    the raw per-block (max_tf, min_tf, min_dl, max_dl) metadata."""
     d, _ = built
     ix = Index(spark, d)
     queries = make_queries(20)
     for k1, b in [(0.9, 0.4), (2.0, 0.0), (1.2, 0.75)]:
         want = oracle.search_all(queries, k=K, k1=k1, b=b)
-        for strategy in ("sharded", "exhaustive", "blockmax"):
+        for strategy in ("sharded", "blockmax"):
             got = index_search(ix, queries, k=K, strategy=strategy,
                                k1=k1, b=b).collect()
             _assert_rank_identical(got, want)
@@ -409,7 +408,8 @@ def test_index_search_query_time_k1_b_override(spark, built, oracle):
         index_search(ix, queries, k=K).collect(),
         oracle.search_all(queries, k=K),
     )
-    with pytest.raises(ValueError, match="blockmax_plan"):
+    # any strategy but the two served ones is refused
+    with pytest.raises(ValueError, match="unknown strategy"):
         index_search(ix, queries, k=K, strategy="blockmax_plan", k1=0.9)
 
 

@@ -6,9 +6,10 @@ position intersection both assumed sortedness — these tests pin the fix
 kernel) on an index built exactly that way: base = even ids, streamed
 append = odd ids in the same range.
 
-Reference: strategy='exhaustive' (independent plan-side scoring over the
-same blocks — shares the index's FROZEN streaming stats, which a
-corpus-level python oracle would not).
+Reference: the python oracle over every doc, pinned to the index's
+frozen stats (n_docs asserted equal, avgdl copied from the manifest). The
+fixture finalizes the stream first, so the index's df covers the
+appended docs as the oracle's does.
 """
 
 import numpy as np
@@ -18,7 +19,8 @@ import pytest
 from sparkbm25.build import BuildParams
 from sparkbm25.index_query import index_phrase_search, index_search
 from sparkbm25.jobs import Index, build_index
-from sparkbm25.streaming import append_batch
+from sparkbm25.oracle import OracleIndex
+from sparkbm25.streaming import append_batch, finalize_stream
 
 N_DOCS = 600  # per parity; universe/shard ~600 -> heavy_at ~75, rare df ~15
 
@@ -62,6 +64,7 @@ def interleaved(spark, tmp_path_factory):
         pd.DataFrame(app_rows, columns=["doc_id", "text"])
     )
     append_batch(app, d, epoch_id=0)
+    finalize_stream(spark, d)
     return Index(spark, d), base_rows + app_rows
 
 
@@ -70,14 +73,17 @@ def _got(df):
                   for r in df.collect())
 
 
-def test_light_term_scoring_matches_exhaustive(interleaved):
+def test_light_term_scoring_matches_oracle(interleaved):
     """Light-only queries take the sparse candidate path; per-term
     positions within a shard interleave across the two groups. Both
-    routes must stay bit-exact vs the independent exhaustive scorer."""
-    ix, _rows = interleaved
+    routes must stay bit-exact vs the independent oracle."""
+    ix, rows = interleaved
     qs = [(0, "rareterm"), (1, "w001 w399"), (2, "rareterm w002"),
           (3, "w123"), (4, "w000 w000 w377")]
-    ref = _got(index_search(ix, qs, k=8, strategy="exhaustive"))
+    ora = OracleIndex.build(rows)
+    assert ora.n_docs == ix.n_docs
+    ora.avgdl = ix.avgdl
+    ref = sorted(ora.search_all(qs, k=8))
     assert ref  # sanity: the reference found something
     got_d = _got(index_search(ix, qs, k=8))               # direct route
     got_e = _got(index_search(ix, qs, k=8, direct=False))  # exchange route

@@ -12,9 +12,9 @@ pruned search that degrades to dense-kernel speed when the bounds
 exclude nothing, and skips decode when they do.
 
 Contract pinned by these tests:
-- bit-exact identity with 'sharded' and 'exhaustive' on both the
-  direct and exchange routes, with subsplit, and under k1/b overrides
-  (derived bounds);
+- bit-exact identity with 'sharded' and with the oracle (pinned to the
+  index's frozen stats) on both the direct and exchange routes, with
+  subsplit, and under k1/b overrides (derived bounds);
 - on a skewed corpus the prune provably drops blocks (asserted on the
   real index's block metadata, not a synthetic frame);
 - on a bounds-hostile frame the analysis reports "nothing excludable"
@@ -43,6 +43,7 @@ from sparkbm25.index_query import (
     index_search,
 )
 from sparkbm25.jobs import Index, build_index
+from sparkbm25.oracle import OracleIndex
 
 
 def _mk_pdf(rows):
@@ -261,13 +262,19 @@ QS = [(1, "alpha"), (2, "alpha w0003"), (3, "w0007 w0011"),
 
 
 @pytest.fixture(scope="module")
-def skewed(spark, tmp_path_factory):
+def skewed_corpus(spark):
     corpus = add_doc_id(
         spark.createDataFrame(_skewed_pdf()), "conv_seq"
     ).select("doc_id", "text")
+    corpus.cache().count()
+    return corpus
+
+
+@pytest.fixture(scope="module")
+def skewed(spark, skewed_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("prune_ix"))
     build_index(
-        corpus, d,
+        skewed_corpus, d,
         BuildParams(num_shards=2, salt_factor=2, num_term_buckets=2,
                     lineage_groups=1, block_size=64,
                     doc_id_scheme="conv_seq"),
@@ -282,8 +289,14 @@ def _rows(df):
     )
 
 
-def test_blockmax_prune_bit_exact_skewed(skewed):
-    base = _rows(index_search(skewed, QS, k=10, strategy="exhaustive"))
+def test_blockmax_prune_bit_exact_skewed(skewed, skewed_corpus):
+    # independent reference: the oracle pinned to the manifest's stats
+    ora = OracleIndex.build(
+        [(r.doc_id, r.text) for r in skewed_corpus.collect()]
+    )
+    assert ora.n_docs == skewed.n_docs
+    ora.avgdl = skewed.avgdl
+    base = sorted(ora.search_all(QS, k=10))
     assert len(base) > 0
     for kw in (
         {},                     # direct route (auto on layout 2)
@@ -294,9 +307,7 @@ def test_blockmax_prune_bit_exact_skewed(skewed):
         sh = _rows(index_search(skewed, QS, k=10, strategy="sharded", **kw))
         bm = _rows(index_search(skewed, QS, k=10, strategy="blockmax", **kw))
         if "k1" in kw:
-            base_kw = _rows(
-                index_search(skewed, QS, k=10, strategy="exhaustive", **kw)
-            )
+            base_kw = sorted(ora.search_all(QS, k=10, k1=kw["k1"], b=kw["b"]))
             assert bm == sh == base_kw
         else:
             assert bm == sh == base

@@ -251,18 +251,3 @@ def test_phrase_direct_route_bit_identical(spark, built, docs, slop):
                                    direct=False))
     assert d and d == e and d == auto
 
-
-def test_phrase_direct_refused_on_layout1(spark, corpus, tmp_path,
-                                          monkeypatch):
-    import sparkbm25.build as build_mod
-    from sparkbm25.jobs import build_index as bi
-
-    monkeypatch.setattr(build_mod, "POSTING_LAYOUT", 1)
-    d = str(tmp_path / "ixl1")
-    bi(corpus, d, PARAMS, source_fingerprint="phl1")
-    ix = Index(spark, d)
-    assert ix.posting_layout == 1
-    with pytest.raises(ValueError, match="layout"):
-        index_phrase_search(ix, [(0, "spark merge")], direct=True)
-    # auto falls back to the exchange kernel and still answers
-    index_phrase_search(ix, [(0, "spark merge")]).collect()

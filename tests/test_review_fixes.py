@@ -75,9 +75,14 @@ def test_stream_growth_keeps_idf_positive_and_blockmax_sound(spark, tmp_path):
     assert all(row[2] > 0 for row in weights)  # df=50 <= N=50
 
     queries = [(0, "zz"), (1, "zz w3"), (2, "extra2 base1")]
+    # independent reference: the oracle over every doc, pinned to the
+    # manifest's stats (finalize lifted n_docs; avgdl stays the base's)
+    ora = OracleIndex.build(base + streamed)
+    assert ora.n_docs == ix.n_docs
+    ora.avgdl = ix.avgdl
     ref = sorted(
-        (r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in
-        index_search(ix, queries, k=5, strategy="exhaustive").collect()
+        (q, rk, d_, round(s, 9))
+        for q, rk, d_, s in ora.search_all(queries, k=5)
     )
     for strategy in ("sharded", "blockmax"):
         got = sorted(

@@ -514,13 +514,20 @@ def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
                               strategy="blockmax").collect()
     )
     assert got_bm == sorted((q, rk, d_) for q, rk, d_, _s in want_logical)
-    # exhaustive path masks too
-    got_ex = sorted(
-        (r.query_id, r.rank, r.doc_id)
-        for r in index_search(ix, queries, k=10,
-                              strategy="exhaustive").collect()
+    # scores too, against the oracle pinned to the manifest's frozen
+    # stats (a logical delete keeps n_docs and avgdl)
+    assert ora_full.n_docs == ix.n_docs
+    ora_full.avgdl = ix.avgdl
+    want_pinned = sorted(
+        ora_full.search_all(queries, k=10, allowed={i for i, _ in alive_docs})
     )
-    assert got_ex == sorted((q, rk, d_) for q, rk, d_, _s in want_logical)
+    for strategy in ("sharded", "blockmax"):
+        got_s = sorted(
+            (r.query_id, r.rank, r.doc_id, r.score)
+            for r in index_search(ix, queries, k=10,
+                                  strategy=strategy).collect()
+        )
+        assert got_s == want_pinned, strategy
 
     # ---- physical purge ------------------------------------------------
     n_before = spark.read.parquet(f"{d}/postings").groupBy().sum(
@@ -537,7 +544,7 @@ def test_delete_docs_then_compact_purges(spark, corpora, tmp_path):
     assert len(ix2.tombstones_array()) == 0
     ora_alive = OracleIndex.build(alive_docs)
     want_purged = ora_alive.search_all(queries, k=10)
-    for strategy in ("sharded", "blockmax", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got2 = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix2, queries, k=10,
@@ -653,7 +660,7 @@ def test_reingest_of_doc_with_base_postings(spark, corpora, tmp_path):
     ora.avgdl = ix.avgdl  # frozen base avgdl (append never re-averages)
     allowed = {i for i, _ in emu if i != sentinel}
     queries = [(0, new_text), (1, old_text), (2, shared)]
-    for strategy in ("sharded", "exhaustive"):
+    for strategy in ("sharded", "blockmax"):
         got = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
             for r in index_search(ix, queries, k=10,
@@ -751,8 +758,8 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
                               where={"role": "user"}).collect()
     )
     assert got_f == want_f
-    # exhaustive has no distributed mask: loud refusal, not wrong results
-    with pytest.raises(ValueError, match="closure-mask threshold"):
+    # any strategy but the two served ones is refused up front
+    with pytest.raises(ValueError, match="unknown strategy"):
         index_search(ix2, queries, k=10, strategy="exhaustive")
 
 
