@@ -800,7 +800,9 @@ def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:
 
 class StageTimer:
     """Per-stage wall-clock metrics — analog of the reference's stage timing
-    logs (core/tasks.py:142-196) persisted into the manifest."""
+    logs (core/tasks.py:142-196) persisted into the manifest. Timed with
+    the monotonic perf_counter, so a clock adjustment mid-stage cannot
+    record a negative or inflated stage time."""
 
     def __init__(self) -> None:
         self.stages: dict[str, float] = {}
@@ -810,12 +812,12 @@ class StageTimer:
 
         class _Ctx:
             def __enter__(self_inner):
-                self_inner.t0 = time.time()
+                self_inner.t0 = time.perf_counter()
                 return self_inner
 
             def __exit__(self_inner, *exc):
                 timer.stages[name] = timer.stages.get(name, 0.0) + (
-                    time.time() - self_inner.t0
+                    time.perf_counter() - self_inner.t0
                 )
                 return False
 

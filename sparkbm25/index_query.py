@@ -8,15 +8,14 @@ the oracle with bit-identical scores (the reference only promises recall;
 here any pruning is *sound*, never approximate).
 
 Kernels (one call per doc-range shard, or per sub-range under subsplit):
-- ``_sharded_topk_fn`` decodes the blocks (vbyte + delta), folds each
-  query's contributions in query-occurrence order (the oracle's order, so
-  exact ties agree bit for bit) and emits the shard-local top-k. It serves
-  strategy='sharded', and strategy='blockmax' in every shape but
-  ``exclude=``/``fields=``; there ``_interval_prune`` first drops blocks
-  whose block-max upper bound cannot reach a seed θ, vectorized over
-  doc-range intervals.
-- ``_wand_topk_fn`` is block-max WAND (θ bootstrap, survivor decode,
-  candidate rescore) for blockmax with ``exclude=``/``fields=``.
+- ``_sharded_topk_fn`` is the one top-k scoring kernel. It decodes the
+  blocks (vbyte + delta), folds each query's contributions in
+  query-occurrence order (the oracle's order, so exact ties agree bit for
+  bit) and emits the shard-local top-k. On strategy='blockmax' it first
+  runs ``_interval_prune``, which drops blocks whose block-max upper bound
+  cannot reach a seed θ, vectorized over doc-range intervals; index_search
+  turns that off for ``exclude=``/``fields=``, where the bounds are not
+  sound.
 - ``_phrase_match_fn`` intersects positions for phrase search.
 
 Routes (the same kernel closure on each, so results are bit-exact across
@@ -37,6 +36,7 @@ Each route ends in one window merge of the shard-local top-k lists
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 from .analysis import parse_prefix_query, tokenize_py
 from .bm25 import idf as idf_fn
 from .codecs import (
-    delta_decode,
     in_sorted as _in_sorted,
     segment_delta_restore,
     vbyte_decode,
@@ -61,13 +60,11 @@ def _query_weights(ix: Index, queries: list[tuple[int, str]]):
     OCCURRENCE: the oracle accumulates w·tf_norm once per token occurrence
     in query order (oracle.py:60-77), and bit-exact tie agreement requires
     the engine to add the same values in the same order — so a duplicated
-    query term yields two rows rather than a qtf-scaled weight.
+    query term yields two entries rather than a qtf-scaled weight.
 
-    Returns (rows, occ):
-      rows — (query_id, term, w=idf, ub_term, rest, qpos) per occurrence,
-             qpos = token position among the query's indexed occurrences;
-      occ  — {query_id: [(term, idf), ...]} in query-token order (the
-             kernels' accumulation schedule)."""
+    Returns occ — {query_id: [(term, idf), ...]} in query-token order (the
+    kernels' accumulation schedule); queries with no indexed term are
+    absent."""
     occ: dict[int, list[tuple[str, float]]] = {}
     terms: set[str] = set()
     for qid, qtext in queries:
@@ -75,36 +72,19 @@ def _query_weights(ix: Index, queries: list[tuple[int, str]]):
             occ.setdefault(qid, []).append((t, 0.0))
             terms.add(t)
     if not terms:
-        return [], {}
+        return {}
     stats = ix.term_stats_lookup(sorted(terms))
-    rows = []
     for qid in list(occ):
         present = [
-            (t, idf_fn(stats[t][0], ix.n_docs), stats[t][1])
+            (t, idf_fn(stats[t][0], ix.n_docs))
             for t, _ in occ[qid]
             if t in stats  # absent term contributes nothing (oracle skips)
         ]
-        if not present:
+        if present:
+            occ[qid] = present
+        else:
             del occ[qid]
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return rows, occ
-
-
-def _weight_rows(
-    qid: int, present: list[tuple[str, float, float]]
-) -> list[tuple]:
-    """(query_id, term, w, ub_term, rest, qpos) rows from one query's
-    resolved occurrences [(term, idf, max_tf_norm), ...] — the single
-    definition of the kernel/WAND weight-row contract, shared by
-    _query_weights and index_prefix_search."""
-    ubs = [w * m for _, w, m in present]
-    total_ub = sum(ubs)
-    return [
-        (qid, t, w, ub, total_ub - ub, qpos)
-        for qpos, ((t, w, _), ub) in enumerate(zip(present, ubs))
-    ]
+    return occ
 
 
 _PRUNE_EPS = 1e-9
@@ -184,8 +164,8 @@ def _interval_prune(pdf: pd.DataFrame,
                     tomb: "tuple | None" = None,
                     qual: "np.ndarray | None" = None):
     """Interval-level block-max pruning for the DENSE kernel (the
-    round-6 answer to BENCH_BOOL_AB.json: the per-block WAND kernel's
-    Python call overhead loses to dense scoring even when its bounds
+    round-6 answer to BENCH_BOOL_AB.json: a per-block WAND kernel's
+    Python call overhead lost to dense scoring even where its bounds
     could pay, so run the bounds analysis VECTORIZED over doc-range
     INTERVALS and feed the surviving blocks to the unchanged densified
     fold — pruned search that degrades to dense-kernel speed, never
@@ -199,8 +179,8 @@ def _interval_prune(pdf: pd.DataFrame,
     - per term t: M_t[i] = max upper-bound tf_norm over t's blocks
       overlapping interval i (a per-block slice-max sweep — once per
       BATCH, not per query).
-    - per query q: θ_q from the same metadata-only bootstrap as the
-      WAND kernel ("k docs provably score >= θ": some block of one
+    - per query q: θ_q from a metadata-only bootstrap ("k docs
+      provably score >= θ": some block of one
       occurrence term holds >= k postings each with lower bound L;
       under sub_shift only blocks fully inside this range may count);
       bound vector B_q[i] = Σ over q's occurrences (t, w) of w*M_t[i];
@@ -559,9 +539,9 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
     composes with sub_shift AND with ``and_need`` (conjunctive queries
     get coverage liveness + a coverage-aware seed theta; the live mask
     applies AFTER the coverage selection, so surviving docs keep exact
-    counts and scores) — the caller routes masked/excluded/
-    field-weighted shapes to the WAND kernel instead (their bootstrap
-    needs decode-time masking).
+    counts and scores), and with tombstones / ``where=`` masks (the
+    seed decode applies them). ``exclude``, ``fieldw`` and ``after``
+    refuse it; index_search runs those shapes unpruned.
 
     ``after`` ({query_id: (score, doc_id) cursor}) activates
     SEARCH-AFTER pagination: only candidates STRICTLY after the cursor
@@ -605,7 +585,7 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
         # masks and the seed decode applies them — _interval_prune doc.)
         raise ValueError(
             "prune_bounds does not compose with exclude / field weights "
-            "/ search_after; route those to the WAND or dense kernel"
+            "/ search_after; run those shapes with prune_bounds=None"
         )
 
     def _run(vs: int, pdf: pd.DataFrame,
@@ -964,8 +944,8 @@ def _sharded_topk_fn(q_terms: dict[int, list[tuple[str, float]]],
 
 def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
                 closure_tomb: "tuple | None"):
-    """Split a cogrouped side frame (the kind-tagged contract shared by
-    the dense and WAND kernels) into (sorted qualifying ids | None,
+    """Split a cogrouped side frame (the kind-tagged contract built by
+    index_search's _side_frame) into (sorted qualifying ids | None,
     tombstone (ids, seqs) pair — distributed rows override the
     closure-shipped pair when present)."""
     if len(side_pdf):
@@ -986,8 +966,7 @@ def _parse_side(side_pdf: pd.DataFrame, has_qual: bool,
 
 
 def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
-                     tombstones: "tuple | None" = None,
-                     items: "list[tuple] | None" = None):
+                     file_map: dict, tombstones: "tuple | None" = None):
     """DIRECT-route kernel: each task reads its shard's parquet files
     straight from the index dir via pyarrow (layout 2's shard-clustered
     files) and scores with the SAME dense kernel as the exchange route —
@@ -1002,65 +981,59 @@ def _direct_topk_gen(kernel, cols: list[str], terms: list[str],
     index shard from shared storage, like any segment-replicated search
     fleet, instead of re-shuffling the index per query batch.
 
-    Work items (one per shard): (shard_id, paths, gseqs). The pyarrow
-    read pushes the term filter down (row groups are term-sorted within a
-    bucket file). ``gseqs`` carries each file's lineage-group seq for
-    per-group tombstone masking; grouping by seq keeps the column
-    assignment exact when a delete must mask only older groups.
-
-    ``items`` (r07): the work items as a driver list; the input frame is
-    then just ``spark.range(len(items))`` row indices. A
-    createDataFrame(rows) work-item frame was a pickled-parallelize
-    PythonRDD whose evaluation needs a python worker from the non-Arrow
-    factory — the first direct search in a session serialized all task
-    threads behind SparkEnv.createPythonWorker while a second daemon +
-    worker pool booted (~1.6 s PER TASK, uniform — measured), and every
-    later search paid a python hop to scan a few hundred bytes. A range
-    scan is pure JVM; the items ship once per task in this closure, like
-    the query weights already do."""
-    inner = kernel
+    Work items: the input frame is ``spark.range(len(file_map))``, and
+    row i serves the i-th shard of ``file_map`` ({shard_id: [(gseq,
+    path), ...]}, Index.shard_file_map) in sorted order. The pyarrow
+    read pushes the term filter down (row groups are term-sorted within
+    a bucket file); each file's lineage-group seq keeps per-group
+    tombstone masking exact. The file lists ship once per task in this
+    closure, like the query weights: a createDataFrame(rows) work-item
+    frame was a pickled-parallelize PythonRDD whose evaluation needs a
+    python worker from the non-Arrow factory — the first direct search
+    in a session serialized all task threads behind
+    SparkEnv.createPythonWorker while a second daemon + worker pool
+    booted (~1.6 s PER TASK, uniform — measured), and every later
+    search paid a python hop to scan a few hundred bytes. A range scan
+    is pure JVM."""
     need_gseq = tombstones is not None and len(tombstones[0]) > 0
     cols = list(cols)
     terms = list(terms)
+    shards = sorted(file_map)
 
     def gen(batches):
         for wpdf in batches:
-            for r in wpdf.itertuples(index=False):
-                if items is not None:
-                    shard_id, paths, gseqs = items[int(r.id)]
-                else:
-                    shard_id, paths, gseqs = (
-                        int(r.shard_id), list(r.paths), list(r.gseqs)
-                    )
+            for i in wpdf["id"]:
+                shard_id = shards[int(i)]
                 pdf = _read_shard_blocks(
-                    list(paths), list(gseqs), cols, terms, need_gseq
+                    file_map[shard_id], cols, terms, need_gseq
                 )
                 if len(pdf):
-                    out = inner((int(shard_id),), pdf)
+                    out = kernel((shard_id,), pdf)
                     if len(out):
                         yield out
 
     return gen
 
 
-def _read_shard_blocks(paths: list, gseqs: list, cols: list[str],
-                       terms: list[str], need_gseq: bool) -> pd.DataFrame:
-    """pyarrow read of one shard's posting files (layout-2 clustered tree)
-    with the term filter pushed down to row groups. use_threads=False: a
-    task must stay inside its ONE Spark core slot — arrow's default pool
-    would use every host core, silently oversubscribing executors (and
-    faking low-core scaling measurements). With ``need_gseq`` files read
-    grouped by lineage seq so per-group tombstone masking stays exact."""
+def _read_shard_blocks(entry: list, cols: list[str], terms: list[str],
+                       need_gseq: bool) -> pd.DataFrame:
+    """pyarrow read of one shard's posting files (``entry``: its
+    [(gseq, path), ...] listing from Index.shard_file_map) with the term
+    filter pushed down to row groups. use_threads=False: a task must stay
+    inside its ONE Spark core slot — arrow's default pool would use every
+    host core, silently oversubscribing executors (and faking low-core
+    scaling measurements). With ``need_gseq`` files read grouped by
+    lineage seq so per-group tombstone masking stays exact."""
     import pyarrow.dataset as pads
 
-    if not paths:
+    if not entry:
         return pd.DataFrame(
             columns=cols + (["gseq"] if need_gseq else [])
         )
     filt = pads.field("term").isin(terms)
     if need_gseq:
         by_gs: dict[int, list[str]] = {}
-        for p, g in zip(paths, gseqs):
+        for g, p in entry:
             by_gs.setdefault(int(g), []).append(p)
         parts = []
         for g, ps in sorted(by_gs.items()):
@@ -1076,7 +1049,7 @@ def _read_shard_blocks(paths: list, gseqs: list, cols: list[str],
             else pd.concat(parts, ignore_index=True)
         )
     return (
-        pads.dataset(paths, format="parquet")
+        pads.dataset([p for _, p in entry], format="parquet")
         .to_table(columns=cols, filter=filt, use_threads=False)
         .to_pandas()
     )
@@ -1124,87 +1097,26 @@ def _direct_side_fn(kernel_cogroup, cols: list[str], terms: list[str],
     entries of strings — closure-shipped like the query terms)."""
 
     def fn(key: tuple, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        entry = file_map.get(int(key[0]), ())
         pdf = _read_shard_blocks(
-            [p for _, p in entry], [g for g, _ in entry],
-            cols, terms, need_gseq,
+            file_map.get(int(key[0]), ()), cols, terms, need_gseq,
         )
         return kernel_cogroup(key, pdf, side_pdf)
 
     return fn
 
 
-def _direct_search(ix: Index, weights, occ, eff_k1: float, eff_b: float,
-                   k: int, tomb: "tuple | None",
-                   strategy: str = "sharded",
-                   derived: bool = False,
-                   and_need: dict[int, int] | None = None,
-                   exclude: dict[int, list[str]] | None = None,
-                   fieldw: tuple | None = None,
-                   eff_avgdl: float | None = None,
-                   after: dict[int, tuple[float, int]] | None = None,
-                   allow_local: bool = True,
+def _direct_search(ix: Index, kernel, occ, terms: list[str],
+                   buckets: list[int], cols: list[str], k: int,
+                   tomb: "tuple | None", allow_local: bool = True,
                    ) -> DataFrame:
     """Assemble the direct route's plan: a tiny work-item DataFrame (one
-    row per shard; LocalRelation -> parallelize, NO exchange) feeding the
-    pyarrow-reading kernel (dense sharded scoring, or block-max WAND for
-    strategy='blockmax' — WAND gains the most: its pruned kernel is light,
-    so the removed exchange dominated its latency), then the global top-k
-    window — exactly ONE exchange in the whole plan (the tiny per-shard
-    top-k merge)."""
-    from .xxhash64 import spark_pmod_bucket
-
+    row per shard; a pure-JVM range scan, NO exchange) feeding the
+    pyarrow-reading scoring kernel, then the global top-k window —
+    exactly ONE exchange in the whole plan (the tiny per-shard top-k
+    merge)."""
     spark = ix.spark
-    # the widened fetch list (scoring ∪ MUST-NOT terms) is computed ONCE
-    # in index_search (_fetch_terms) and shared with the exchange route,
-    # so the routes' bit-exactness can't drift on fetch scope
-    terms = _fetch_terms(weights, exclude)
-    buckets = sorted(
-        {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-    )
-    avgdl = ix.avgdl if eff_avgdl is None else eff_avgdl
-    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
-    if fieldw is not None:
-        cols.append("pos_vbyte")
-    if strategy == "blockmax":
-        cols += ["first_doc", "last_doc"]
-        # derived bounds replace the precomputed tf_norm bounds entirely —
-        # don't read columns the kernel ignores
-        cols += (
-            ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-            else ["max_tf_norm", "min_tf_norm"]
-        )
-        if not exclude and fieldw is None:
-            # interval-pruned dense kernel (BENCH_BOOL_AB.json follow-up):
-            # the bounds analysis runs vectorized over doc-range
-            # intervals, the scoring is the unchanged densified fold —
-            # never slower than 'sharded', skips decode where bounds
-            # pay; conjunctive queries (and_need) compose via coverage
-            # liveness + the coverage-aware seed theta, and tombstones
-            # via mask-exact seed decode (_interval_prune doc)
-            kernel = _sharded_topk_fn(
-                occ, eff_k1, eff_b, avgdl, k, None,
-                prune_bounds="derived" if derived else "stored",
-                and_need=and_need, tombstones=tomb,
-            )
-        else:
-            kernel = _wand_topk_fn(
-                occ, eff_k1, eff_b, avgdl, k, None,
-                derived_bounds=derived, tombstones=tomb,
-                and_need=and_need, exclude=exclude, fieldw=fieldw,
-            )
-    else:
-        kernel = _sharded_topk_fn(
-            occ, eff_k1, eff_b, avgdl, k, None, tombstones=tomb,
-            and_need=and_need, exclude=exclude, fieldw=fieldw,
-            after=after,
-        )
     fm = ix.shard_file_map(buckets)
-    rows = [
-        (s, [p for _, p in fm[s]], [g for g, _ in fm[s]])
-        for s in sorted(fm)
-    ]
-    if not rows:
+    if not fm:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, score double"
         )
@@ -1228,12 +1140,10 @@ def _direct_search(ix: Index, weights, occ, eff_k1: float, eff_b: float,
         )
     # range-scan work items, one row (= one shard) per task: pure-JVM
     # input, no exchange, and the (tiny) file lists ride the kernel
-    # closure (_direct_topk_gen docstring; r07 — replaces the pickled-
-    # parallelize frame whose PythonRDD evaluation booted a second
-    # worker pool and paid a python hop per action)
-    items = spark.range(len(rows), numPartitions=len(rows))
+    # closure (_direct_topk_gen docstring)
+    items = spark.range(len(fm), numPartitions=len(fm))
     tops = items.mapInPandas(
-        _direct_topk_gen(kernel, cols, terms, tombstones=tomb, items=rows),
+        _direct_topk_gen(kernel, cols, terms, fm, tombstones=tomb),
         schema="query_id int, doc_id long, score double",
     )
     return topk_window(tops, k)
@@ -1417,453 +1327,6 @@ def _local_search(spark, kernel, cols: list[str], terms: list[str],
         "CAST(c3 AS BIGINT) doc_id, CAST(c4 AS DOUBLE) score "
         "FROM (VALUES {}) AS t(c1, c2, c3, c4)".format(vals)
     )
-
-
-def _wand_topk_fn(q_occ: dict[int, list[tuple[str, float]]],
-                  k1: float, b: float, avgdl: float, k: int,
-                  sub_shift: int | None = None,
-                  derived_bounds: bool = False,
-                  cogroup: bool = False, has_qual: bool = False,
-                  tombstones: "tuple | None" = None,
-                  and_need: dict[int, int] | None = None,
-                  exclude: dict[int, list[str]] | None = None,
-                  fieldw: tuple | None = None):
-    """Shard-local block-max WAND kernel: the module doc's 3-phase pruned
-    traversal executed INSIDE the shard task on block metadata, so pruned
-    search keeps the sharded path's one-shuffle plan (the DataFrame 3-phase
-    plan spent ~8 Spark jobs per batch — VERDICT r01 #5). All bounds are
-    shard-local (tighter than the global plan's) and epsilon-widened, so the
-    result is EXACT under the total order (score desc, doc_id asc):
-
-    phase 1  θ = per-term bootstrap from block minima (k docs provably ≥ θ)
-    phase 2  decode only blocks with w·max_tf_norm + rest ≥ θ; partial P
-    phase 3  τ = kth P; re-decode pruned blocks covering candidates with
-             P + missing-UB ≥ τ (a doc lives in exactly ONE block per term,
-             so adding a pruned block's contribution cannot double-count).
-
-    Decoded blocks are cached per task, so a term shared by many queries
-    decodes once, like the dense sharded kernel. q_occ holds each query's
-    (term, idf) list per token OCCURRENCE in query order; final candidate
-    scores are summed in exactly that order (lexsort by (doc, qpos) +
-    ordered reduceat), matching OracleIndex.search bit-exactly so exact
-    ties break by doc_id in both engines.
-
-    With ``sub_shift`` the group is a finer doc-range (virtual shard, see
-    _sharded_topk_fn): decoded postings mask to the range, and phase 1's
-    bootstrap counts only blocks fully CONTAINED in it (a straddling
-    block's n_docs overcounts this range, and an overcounted "k docs >= θ"
-    claim would over-prune — containment keeps θ sound, merely looser, so
-    the result stays exact).
-
-    Round-5 unification — the pruned path survives production traffic:
-    - ``derived_bounds``: per-block upper/lower contribution bounds are
-      computed AT QUERY TIME from the stored raw (max_tf, min_dl) /
-      (min_tf, max_dl) integers under the EFFECTIVE (k1, b) — tf_norm is
-      monotone increasing in tf and decreasing in dl (each IEEE op is
-      correctly rounded hence weakly monotone, so the float bound is
-      sound, not just the real-arithmetic one) — removing the k1/b
-      override refusal.
-    - ``tombstones`` (closure pair) / ``cogroup`` side rows (kind=1
-      distributed tombstones, kind=0 `where=` qualifying ids when
-      ``has_qual``): decoded blocks mask per posting exactly like the
-      dense kernel. Phase 1's METADATA bootstrap would count dead or
-      non-qualifying docs toward "k docs ≥ θ" and over-prune, so under
-      any mask it switches to a DECODE-BASED bootstrap: blocks are walked
-      in descending lower-bound order and their LIVE QUALIFYING posting
-      counts accumulate until k is proven (decodes cache, so phase 2
-      reuses them). θ stays sound; pruning degrades gracefully with
-      mask selectivity instead of being refused.
-
-    Round-6 unification — the boolean surfaces run pruned too:
-    - ``exclude`` ({query_id: [terms]}, Lucene MUST_NOT): each excluded
-      term's blocks decode into a per-query sorted id set applied at
-      ACCUMULATION time — excluded docs never enter P/CU, so τ stays
-      sound (an excluded doc holding the kth partial would over-prune a
-      true candidate), and the θ bootstrap switches to the decode-based
-      variant counting only non-excluded docs. Survivor scores are the
-      bitwise-unchanged OR sums (exclusion only ever drops whole docs).
-    - ``and_need`` ({query_id: required distinct-token coverage} —
-      mode='and' and minimum_should_match): these queries skip the θ/τ
-      machinery for CANDIDATE-DRIVEN conjunctive retrieval, the textbook
-      stronger pruning for mandatory terms. With d shard-present distinct
-      terms and requirement n, any covering doc must match one of the
-      d-n+1 rarest terms (missing all of them leaves at most n-1
-      matches), so those terms' postings form the candidate list; every
-      other term decodes only blocks whose [first_doc, last_doc] range
-      intersects it. Coverage is counted per candidate (group-local and
-      exact — a doc's postings live in its one doc-range group), scores
-      are the canonical-fold OR sums of covering docs restricted to
-      decoded-∩-candidates (survivors ⊆ candidates, so nothing is
-      lost) — bit-identical to the sharded kernel's post-fold filter."""
-    EPS = 1e-9
-    wanted = {t for tw in q_occ.values() for t, _ in tw}
-    if exclude:
-        wanted |= {t for ts in exclude.values() for t in ts}
-
-    def _run(vs: int, pdf: pd.DataFrame,
-             qual: "np.ndarray | None",
-             tomb: "tuple | None") -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
-        if pdf.empty:
-            return empty
-        masked = (qual is not None) or (tomb is not None and len(tomb[0]))
-        if tomb is not None and not len(tomb[0]):
-            tomb = None
-        from .bm25 import tf_norm_np
-        from .codecs import dead_mask as _dead_mask
-
-        tdata: dict[str, dict] = {}
-        for term, grp in pdf.groupby("term", sort=False):
-            if term not in wanted:
-                continue
-            if fieldw is not None:
-                # BM25F bounds from the raw block integers under the
-                # WEIGHT ENVELOPE: tf~ <= wmax*max_tf (weighted avg of the
-                # field tfs) and dl~ >= wmin*min_dl, so
-                # tf_norm(wmax*max_tf, wmin*min_dl) under the weighted
-                # avgdl upper-bounds every posting's weighted tf_norm
-                # (monotone inc in tf~, dec in dl~); the lower bound
-                # mirrors with (wmin*min_tf, wmax*max_dl). Sound for any
-                # positive weights; looser than exact per-field bounds,
-                # which the layout does not store.
-                _, w_t, w_b = fieldw
-                wmax, wmin = max(w_t, w_b), min(w_t, w_b)
-                maxt = tf_norm_np(
-                    wmax * grp["max_tf"].to_numpy(dtype=np.float64),
-                    wmin * grp["min_dl"].to_numpy(dtype=np.float64),
-                    avgdl, k1, b,
-                )
-                mint = tf_norm_np(
-                    wmin * grp["min_tf"].to_numpy(dtype=np.float64),
-                    wmax * grp["max_dl"].to_numpy(dtype=np.float64),
-                    avgdl, k1, b,
-                )
-            elif derived_bounds:
-                maxt = tf_norm_np(
-                    grp["max_tf"].to_numpy(dtype=np.int64),
-                    grp["min_dl"].to_numpy(dtype=np.int64), avgdl, k1, b,
-                )
-                mint = tf_norm_np(
-                    grp["min_tf"].to_numpy(dtype=np.int64),
-                    grp["max_dl"].to_numpy(dtype=np.int64), avgdl, k1, b,
-                )
-            else:
-                maxt = grp["max_tf_norm"].to_numpy()
-                mint = grp["min_tf_norm"].to_numpy()
-            tdata[term] = {
-                "n": grp["n_docs"].to_numpy(),
-                "first": grp["first_doc"].to_numpy(),
-                "last": grp["last_doc"].to_numpy(),
-                "maxt": maxt,
-                "mint": mint,
-                "gseq": (
-                    grp["gseq"].to_numpy(dtype=np.int64)
-                    if tomb is not None else None
-                ),
-                "dv": grp["docs_vbyte"].to_list(),
-                "tv": grp["tfs_vbyte"].to_list(),
-                "lv": grp["dls_vbyte"].to_list(),
-                "pv": (grp["pos_vbyte"].to_list()
-                       if fieldw is not None else None),
-                "dec": [None] * len(grp),
-            }
-
-        def dec(td: dict, j: int):
-            if td["dec"][j] is None:
-                n = int(td["n"][j])
-                ids = delta_decode(vbyte_decode(td["dv"][j], n))
-                tfs_i = vbyte_decode(td["tv"][j], n)
-                dls = vbyte_decode(td["lv"][j], n).astype(np.float64)
-                if fieldw is not None:
-                    # same weighted tf~/dl~ derivation as the sharded
-                    # kernel (index_bm25f_search): tf1 from positions
-                    split, w_t, w_b = fieldw
-                    cnt = tfs_i.astype(np.int64)
-                    pos_gaps = vbyte_decode(td["pv"][j], int(cnt.sum()))
-                    starts = np.cumsum(cnt) - cnt
-                    pos_all = segment_delta_restore(pos_gaps, starts, cnt)
-                    tf1 = np.add.reduceat(
-                        (pos_all < split).astype(np.int64), starts
-                    )
-                    tfs = w_t * tf1 + w_b * (cnt - tf1)
-                    dls = (
-                        w_t * np.minimum(dls, float(split))
-                        + w_b * np.maximum(dls - split, 0.0)
-                    )
-                else:
-                    tfs = tfs_i.astype(np.float64)
-                tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                m = None
-                if sub_shift is not None:
-                    m = (ids >> np.int64(sub_shift)) == vs
-                if tomb is not None:
-                    mt = ~_dead_mask(
-                        ids, td["gseq"][j], tomb[0], tomb[1]
-                    )
-                    m = mt if m is None else (m & mt)
-                if qual is not None:
-                    mq = _in_sorted(ids, qual)
-                    m = mq if m is None else (m & mq)
-                if m is not None:
-                    ids, tfn = ids[m], tfn[m]
-                td["dec"][j] = (ids, tfn)
-            return td["dec"][j]
-
-        def _fold_select(tri_d: list, tri_p: list, tri_v: list):
-            """Canonical query-order summation per doc (lexsort by
-            (doc, qpos) then a STRICTLY SEQUENTIAL per-doc fold —
-            bit-identical to the oracle's per-occurrence accumulation;
-            np.add.reduceat is pairwise even for 4 elements) followed by
-            the top-k selection under (score desc, doc_id asc)."""
-            d_all = np.concatenate(tri_d)
-            p_all = np.concatenate(tri_p)
-            v_all = np.concatenate(tri_v)
-            order = np.lexsort((p_all, d_all))
-            d_s, v_s = d_all[order], v_all[order]
-            bounds = np.flatnonzero(np.r_[True, d_s[1:] != d_s[:-1]])
-            counts = np.diff(np.r_[bounds, len(d_s)])
-            cs = np.zeros(len(bounds))
-            for r in range(int(counts.max())):  # <= #query occurrences
-                sel = counts > r
-                cs[sel] += v_s[bounds[sel] + r]
-            cd = d_s[bounds]
-            kk = min(k, len(cd))
-            kth = -np.partition(-cs, kk - 1)[kk - 1]
-            sel = np.flatnonzero(cs >= kth)
-            keep2 = sel[np.lexsort((cd[sel], -cs[sel]))][:k]
-            return cd[keep2], cs[keep2]
-
-        rows_q, rows_d, rows_s = [], [], []
-        for qid, tw_full in q_occ.items():
-            # occurrences present in this shard, with their query positions
-            tw = [
-                (qpos, t, w)
-                for qpos, (t, w) in enumerate(tw_full)
-                if t in tdata
-            ]
-            if not tw:
-                continue
-            # per-query MUST-NOT id set: excluded terms' blocks decode
-            # (cached, globally masked) into one sorted array applied at
-            # accumulation time below
-            ex_ids = None
-            if exclude and qid in exclude:
-                arrs = [
-                    dec(tdata[t], j)[0]
-                    for t in exclude[qid] if t in tdata
-                    for j in range(len(tdata[t]["n"]))
-                ]
-                arrs = [a for a in arrs if len(a)]
-                if arrs:
-                    ex_ids = np.unique(np.concatenate(arrs))
-                    if not len(ex_ids):
-                        ex_ids = None
-
-            if and_need is not None and qid in and_need:
-                # ---- candidate-driven conjunctive retrieval ----------
-                need = and_need[qid]
-                dterms = list(dict.fromkeys(t for _, t, _ in tw))
-                if len(dterms) < need:
-                    continue  # this doc range cannot cover the query
-                by_df = sorted(
-                    dterms, key=lambda t: int(tdata[t]["n"].sum())
-                )
-                gen_arrs = [
-                    dec(tdata[t], j)[0]
-                    for t in by_df[: len(dterms) - need + 1]
-                    for j in range(len(tdata[t]["n"]))
-                ]
-                gen_arrs = [a for a in gen_arrs if len(a)]
-                if not gen_arrs:
-                    continue
-                cand = np.unique(np.concatenate(gen_arrs))
-                if ex_ids is not None:
-                    cand = cand[~_in_sorted(cand, ex_ids)]
-                if not len(cand):
-                    continue
-                cov = np.zeros(len(cand), dtype=np.int32)
-                term_hits: dict[str, tuple] = {}
-                for t in dterms:
-                    td = tdata[t]
-                    # range-skip: only blocks overlapping the candidate
-                    # list can contribute (same searchsorted test as the
-                    # θ path's phase 3)
-                    lo = np.searchsorted(cand, td["first"], side="left")
-                    hi = np.searchsorted(cand, td["last"], side="right")
-                    idxs, vals = [], []
-                    for j in np.flatnonzero(hi > lo):
-                        ids, tfn = dec(td, int(j))
-                        if not len(ids):
-                            continue
-                        pos = np.searchsorted(cand, ids)
-                        pos_c = np.minimum(pos, len(cand) - 1)
-                        m = cand[pos_c] == ids
-                        if m.any():
-                            idxs.append(pos_c[m])
-                            vals.append(tfn[m])
-                    if idxs:
-                        pi = np.concatenate(idxs)
-                        cov[np.unique(pi)] += 1  # distinct-term coverage
-                        term_hits[t] = (pi, np.concatenate(vals))
-                covered = cov >= need
-                if not covered.any():
-                    continue
-                tri_d, tri_p, tri_v = [], [], []
-                for qpos, t, w in tw:
-                    th = term_hits.get(t)
-                    if th is None:
-                        continue
-                    pi, pv = th
-                    m = covered[pi]
-                    if m.any():
-                        tri_d.append(cand[pi[m]])
-                        tri_p.append(
-                            np.full(int(m.sum()), qpos, dtype=np.int32)
-                        )
-                        tri_v.append(w * pv[m])
-                if not tri_d:
-                    continue
-                cd2, cs2 = _fold_select(tri_d, tri_p, tri_v)
-                rows_q.append(np.full(len(cd2), qid, dtype=np.int32))
-                rows_d.append(cd2)
-                rows_s.append(cs2)
-                continue
-
-            ub = {qpos: w * float(tdata[t]["maxt"].max()) for qpos, t, w in tw}
-            S = sum(ub.values())
-            # phase 1: θ bootstrap — "k docs provably score >= θ". From
-            # metadata minima alone when unmasked; under tombstone/filter
-            # masks (or a MUST-NOT set), from cached decodes in descending
-            # lower-bound order (only LIVE QUALIFYING NON-EXCLUDED docs
-            # may count toward the claim).
-            theta = 0.0
-            for qpos, t, w in tw:
-                td = tdata[t]
-                L = w * td["mint"]
-                if masked or ex_ids is not None:
-                    order = np.argsort(-L, kind="stable")
-                    cnt = 0
-                    for j in order:
-                        ids_j = dec(td, int(j))[0]
-                        if ex_ids is not None and len(ids_j):
-                            ids_j = ids_j[~_in_sorted(ids_j, ex_ids)]
-                        cnt += len(ids_j)
-                        if cnt >= k:
-                            theta = max(theta, float(L[j]))
-                            break
-                    continue
-                nn = td["n"]
-                if sub_shift is not None:
-                    # only blocks fully inside this doc-range may count
-                    # toward the "k docs provably >= θ" claim
-                    cont = ((td["first"] >> np.int64(sub_shift)) == vs) & (
-                        (td["last"] >> np.int64(sub_shift)) == vs
-                    )
-                    if not cont.any():
-                        continue
-                    L, nn = L[cont], nn[cont]
-                order = np.argsort(-L, kind="stable")
-                cum = np.cumsum(nn[order])
-                hit = np.flatnonzero(cum >= k)
-                if len(hit):
-                    theta = max(theta, float(L[order[hit[0]]]))
-            theta_eps = theta - abs(theta) * EPS
-            # phase 2: decode survivors, partial scores
-            parts = []  # (qpos, ids, contrib, ub_occ)
-            pruned: list[tuple[int, str, float, np.ndarray]] = []
-            for qpos, t, w in tw:
-                td = tdata[t]
-                ub_b = w * td["maxt"] + (S - ub[qpos])
-                surv = ub_b >= theta_eps
-                for j in np.flatnonzero(surv):
-                    ids, tfn = dec(td, int(j))
-                    if ex_ids is not None and len(ids):
-                        mx = ~_in_sorted(ids, ex_ids)
-                        ids, tfn = ids[mx], tfn[mx]
-                    parts.append((qpos, ids, w * tfn, ub[qpos]))
-                pr = np.flatnonzero(~surv)
-                if len(pr):
-                    pruned.append((qpos, t, w, pr))
-            if not parts:
-                continue
-            ids_all = np.concatenate([p[1] for p in parts])
-            sc_all = np.concatenate([p[2] for p in parts])
-            ub_all = np.concatenate(
-                [np.full(len(p[1]), p[3]) for p in parts]
-            )
-            if not len(ids_all):
-                continue  # every decoded posting masked out of this range
-            uids, inv = np.unique(ids_all, return_inverse=True)
-            P = np.bincount(inv, weights=sc_all, minlength=len(uids))
-            CU = np.bincount(inv, weights=ub_all, minlength=len(uids))
-            if len(uids) > k:
-                tau = float(-np.partition(-P, k - 1)[k - 1])
-            else:
-                tau = float("-inf")
-            M = np.maximum(S - CU, 0.0)
-            cand_mask = P + M >= tau - abs(tau) * EPS
-            cand_ids = uids[cand_mask]  # sorted (np.unique output)
-            # candidate membership via searchsorted on the ALREADY-SORTED
-            # cand_ids (np.unique output) — np.isin re-sorts its second
-            # argument on EVERY call, which at 5.5M-turn shards made these
-            # two loops 6.2 s of a 7.5 s kernel (profiled)
-            def in_cands(ids: np.ndarray) -> np.ndarray:
-                return _in_sorted(ids, cand_ids)
-
-            # candidate contributions from surviving blocks, tagged by qpos
-            tri_d, tri_p, tri_v = [], [], []
-            for qpos, ids, contrib, _u in parts:
-                keep = in_cands(ids)
-                if keep.any():
-                    tri_d.append(ids[keep])
-                    tri_p.append(np.full(int(keep.sum()), qpos, dtype=np.int32))
-                    tri_v.append(contrib[keep])
-            # phase 3: exact missing contributions for candidates
-            for qpos, t, w, pr in pruned:
-                td = tdata[t]
-                lo = np.searchsorted(cand_ids, td["first"][pr], side="left")
-                hi = np.searchsorted(cand_ids, td["last"][pr], side="right")
-                for jj in np.flatnonzero(hi > lo):
-                    j = int(pr[jj])
-                    ids, tfn = dec(td, j)
-                    keep = in_cands(ids)
-                    if not keep.any():
-                        continue
-                    tri_d.append(ids[keep])
-                    tri_p.append(np.full(int(keep.sum()), qpos, dtype=np.int32))
-                    tri_v.append(w * tfn[keep])
-            if not tri_d:
-                continue
-            cd2, cs2 = _fold_select(tri_d, tri_p, tri_v)
-            rows_q.append(np.full(len(cd2), qid, dtype=np.int32))
-            rows_d.append(cd2)
-            rows_s.append(cs2)
-        if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "doc_id": np.concatenate(rows_d),
-                "score": np.concatenate(rows_s),
-            }
-        )
-
-    def topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _run(int(key[0]), pdf, None, tombstones)
-
-    def topk_cogroup(key: tuple, blocks_pdf: pd.DataFrame,
-                     side_pdf: pd.DataFrame) -> pd.DataFrame:
-        # same kind-tagged side contract as the dense kernel
-        qual, tomb = _parse_side(side_pdf, has_qual, tombstones)
-        return _run(int(key[0]), blocks_pdf, qual, tomb)
-
-    return topk_cogroup if cogroup else topk
 
 
 PHRASE_MATCH_SCHEMA = "query_id int, doc_id long, ptf int, dl int"
@@ -2130,18 +1593,13 @@ def index_phrase_search(
         cols = ["term", "n_docs", "first_doc",
                 "docs_vbyte", "tfs_vbyte", "dls_vbyte", "pos_vbyte"]
         fm = ix.shard_file_map(buckets)
-        rows = [
-            (sh, [p for _, p in fm[sh]], [g for g, _ in fm[sh]])
-            for sh in sorted(fm)
-        ]
-        if not rows:
+        if not fm:
             return empty
         # range-scan work items (see _direct_topk_gen: pure-JVM input,
         # file lists in the closure — no PythonRDD scan)
-        items = spark.range(len(rows), numPartitions=len(rows))
+        items = spark.range(len(fm), numPartitions=len(fm))
         matched = items.mapInPandas(
-            _direct_topk_gen(kern, cols, terms, tombstones=tomb,
-                             items=rows),
+            _direct_topk_gen(kern, cols, terms, fm, tombstones=tomb),
             schema=PHRASE_MATCH_SCHEMA,
         )
     else:
@@ -2224,32 +1682,28 @@ def index_prefix_search(
     stats = ix.term_stats_lookup(exact) if exact else {}
     exp = ix.prefix_expand(stems, max_expansions) if stems else {}
     occ: dict[int, list[tuple[str, float]]] = {}
-    rows: list[tuple] = []
     for qid, toks in parsed.items():
-        # (term, idf, max_tf_norm) per resolved occurrence, query order
-        present: list[tuple[str, float, float]] = []
+        # (term, idf) per resolved occurrence, query order
+        present: list[tuple[str, float]] = []
         for t, is_pref in toks:
             if is_pref:
-                for term, df, mtn in exp.get(t, ()):
-                    present.append((term, idf_fn(df, ix.n_docs), mtn))
+                for term, df, _mtn in exp.get(t, ()):
+                    present.append((term, idf_fn(df, ix.n_docs)))
             elif (v := stats.get(t)) is not None:
-                present.append((t, idf_fn(v[0], ix.n_docs), v[1]))
-        if not present:
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return index_search(
-        ix, queries, k=k, _resolved=(rows, occ), **kwargs
-    )
+                present.append((t, idf_fn(v[0], ix.n_docs)))
+        if present:
+            occ[qid] = present
+    return index_search(ix, queries, k=k, _resolved=occ, **kwargs)
 
 
-def _fetch_terms(weights, exclude: dict[int, list[str]] | None) -> list[str]:
+def _fetch_terms(occ: dict[int, list[tuple[str, float]]],
+                 exclude: dict[int, list[str]] | None) -> list[str]:
     """The block-fetch term list: scoring terms ∪ MUST-NOT terms
-    (exclusion blocks ride the same fetch presence-only). One definition
-    shared by the direct and exchange routes — their bit-exactness
-    guarantee includes fetch scope."""
+    (exclusion blocks ride the same fetch presence-only). Computed once
+    in index_search for every route — their bit-exactness guarantee
+    includes fetch scope."""
     return sorted(
-        {t for _, t, *_ in weights}
+        {t for tw in occ.values() for t, _ in tw}
         | ({t for ts in exclude.values() for t in ts} if exclude else set())
     )
 
@@ -2318,19 +1772,14 @@ def index_fuzzy_search(
         ix.fuzzy_expand(stems, max_dist, max_expansions) if stems else {}
     )
     occ: dict[int, list[tuple[str, float]]] = {}
-    rows: list[tuple] = []
     for qid, toks in parsed.items():
-        present: list[tuple[str, float, float]] = []
-        for t in toks:
-            for term, df, mtn in exp.get(t, ()):
-                present.append((term, idf_fn(df, ix.n_docs), mtn))
-        if not present:
-            continue
-        occ[qid] = [(t, w) for t, w, _ in present]
-        rows.extend(_weight_rows(qid, present))
-    return index_search(
-        ix, queries, k=k, _resolved=(rows, occ), **kwargs
-    )
+        present = [
+            (term, idf_fn(df, ix.n_docs))
+            for t in toks for term, df, _mtn in exp.get(t, ())
+        ]
+        if present:
+            occ[qid] = present
+    return index_search(ix, queries, k=k, _resolved=occ, **kwargs)
 
 
 def index_bm25f_search(
@@ -2355,10 +1804,9 @@ def index_bm25f_search(
     exactly from doc_stats integer sums (Index.bm25f_avgdl); df/idf are
     the unchanged any-field counts, matching the corpus-scan path.
 
-    Delegates to index_search's kernels (direct and exchange routes;
-    'sharded' default or 'blockmax' — the WAND kernel derives sound
-    pruning bounds from the raw block integers under the weight
-    envelope tf~ <= wmax*max_tf, dl~ >= wmin*min_dl), so
+    Delegates to index_search's kernel (direct and exchange routes;
+    'sharded' default or 'blockmax', which runs field-weighted queries
+    unpruned), so
     where=/k1/b/tombstones/mode/min_match/exclude all compose; with
     integer-valued weights results are bit-identical to the corpus-scan
     path pre-rounding.
@@ -2413,7 +1861,7 @@ def index_search(
     fields: tuple | None = None,
     search_after: dict[int, tuple[float, int]] | None = None,
     collapse: str | None = None,
-    _resolved: tuple | None = None,
+    _resolved: dict | None = None,
 ) -> DataFrame:
     """Exact top-k BM25 from the index: (query_id, rank, doc_id, score)
     rows, ties broken by ascending doc_id, scores bit-identical to the
@@ -2424,14 +1872,15 @@ def index_search(
                     each shard's kernel decodes the query terms' blocks,
                     folds every query in numpy (_sharded_topk_fn) and
                     emits only its local top-k; one window merges them.
-      "blockmax"    the same plan with sound block-max pruning, exact.
-                    Every shape but `exclude=`/`fields=` runs the
-                    INTERVAL-pruned dense kernel (_interval_prune bounds
-                    over doc-range intervals; surviving blocks feed the
-                    unchanged fold, so it degrades to 'sharded' speed
-                    when the bounds exclude nothing). Those two run the
-                    block-max WAND kernel (_wand_topk_fn), whose θ
-                    bootstrap masks at decode time.
+      "blockmax"    the same kernel with sound block-max pruning,
+                    exact: _interval_prune bounds over doc-range
+                    intervals drop blocks first, and the surviving blocks
+                    feed the unchanged fold, so it degrades to 'sharded'
+                    speed when the bounds exclude nothing.
+                    `exclude=`/`fields=` run unpruned, exactly like
+                    'sharded': a partial decode cannot prove a doc lacks
+                    a MUST_NOT term, and field-weighted bounds would need
+                    the positional split.
 
     Routes (same kernels, same fold order — bit-exact across routes):
     driver-local for a few queries over a bounded posting volume
@@ -2484,16 +1933,9 @@ def index_search(
     sums (an AND hit matches every term, so its OR and AND scores are
     bitwise identical); the doc-range sharding makes the coverage test
     group-local (see _sharded_topk_fn). Served by both strategies on
-    every route; composes with where=/k1/b/tombstones.
-    On 'blockmax' these queries run CANDIDATE-DRIVEN conjunctive
-    retrieval (see _wand_topk_fn). Measured guidance (BENCH_BOOL_AB.json):
-    on the fixture corpus the dense 'sharded' kernel beats 'blockmax'
-    at EVERY batch size and core count — iid-Zipf text is prune-hostile
-    (block bounds sit near actual scores, θ excludes little) while the
-    WAND kernel pays per-block call overhead. Prefer the default
-    'sharded' for interactive traffic; 'blockmax' is the asymptotic
-    design point (per-term postings ≫ task memory, skewed real-text tf
-    where block maxima discriminate).
+    every route; composes with where=/k1/b/tombstones. On 'blockmax'
+    the pruner adds coverage liveness and a coverage-aware seed θ (see
+    _interval_prune).
 
     `min_match` (mode='or') is Lucene's
     minimum-should-match: rank only docs matching >= that many DISTINCT
@@ -2514,9 +1956,8 @@ def index_search(
     scored and excluded in the SAME query raises (always-empty by
     construction) — except under prefix expansion, where excluding one
     of a wildcard's own expansions ("w07*" minus "w0777") is legitimate
-    and simply drops that token's docs. Both strategies (the WAND
-    kernel filters excluded docs at accumulation time so its τ bound
-    stays sound), every route; composes with
+    and simply drops that token's docs. Both strategies ('blockmax'
+    runs these queries unpruned), every route; composes with
     mode/min_match/where=/k1/b/tombstones and
     with prefix search (exclusion tokens are exact, never expanded).
 
@@ -2555,8 +1996,8 @@ def index_search(
     search_after (a doc-level cursor could resurface a page-1 group
     via its second-best doc).
 
-    `_resolved` (internal) bypasses _query_weights with pre-expanded
-    (weights, occ) — the prefix-search entry point resolves wildcard
+    `_resolved` (internal) bypasses _query_weights with a pre-expanded
+    occ map — the prefix-search entry point resolves wildcard
     tokens against the vocabulary and delegates everything else here.
     """
     from .jobs import TOMBSTONE_BROADCAST_MAX
@@ -2616,14 +2057,14 @@ def index_search(
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     if _resolved is not None:
-        weights, occ = _resolved
+        occ = _resolved
         if mode == "and":
             raise ValueError(
                 "mode='and' does not compose with prefix expansion "
                 "(coverage over expanded synonym sets is undefined)"
             )
     else:
-        weights, occ = _query_weights(ix, queries)
+        occ = _query_weights(ix, queries)
     and_need: dict[int, int] | None = None
     if mode == "and":
         # required count = the query's distinct TOKENS (vocabulary
@@ -2645,7 +2086,6 @@ def index_search(
                 and_need[qid] = len(toks)
             else:
                 del occ[qid]
-        weights = [r for r in weights if r[0] in occ]
     if min_match is not None:
         if mode == "and":
             raise ValueError(
@@ -2671,7 +2111,6 @@ def index_search(
                     # unsatisfiable, drop driver-side (mirrors the SQL
                     # oracle, where no doc can reach the HAVING threshold)
                     del occ[qid]
-            weights = [r for r in weights if r[0] in occ]
     excl_map: dict[int, list[str]] | None = None
     if exclude:
         ex_tokens = {qid: tokenize_py(txt) for qid, txt in exclude.items()}
@@ -2748,14 +2187,32 @@ def index_search(
         "query_id int, rank int, doc_id long, score double"
         + (", value string" if collapse is not None else "")
     )
-    if not weights:
+    if not occ:
         return spark.createDataFrame([], out_schema)
-    # k1/b overrides on blockmax derive sound bounds under the effective
-    # parameters from each block's RAW bound inputs (max_tf/min_tf/
-    # min_dl/max_dl)
-    derived = strategy == "blockmax" and (
-        eff_k1 != ix.k1 or eff_b != ix.b or fw is not None
+    # k1/b overrides derive sound bounds under the effective parameters
+    # from each block's RAW bound inputs (max_tf/min_tf/min_dl/max_dl)
+    derived = eff_k1 != ix.k1 or eff_b != ix.b
+    # the one pruning decision, shared by every route: blockmax prunes
+    # wherever the bounds are sound; exclude/fields run unpruned (the
+    # kernel refuses prune_bounds with either)
+    prune = (
+        ("derived" if derived else "stored")
+        if strategy == "blockmax" and not excl_map and fw is None
+        else None
     )
+    # the block columns the kernel reads: decode streams, positions for
+    # field weights, and the bound metadata prune needs (derived bounds
+    # replace the stored tf_norm bounds entirely)
+    cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte", "dls_vbyte"]
+    if fw is not None:
+        cols.append("pos_vbyte")
+    if prune is not None:
+        cols += ["first_doc", "last_doc"] + (
+            ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
+            else ["max_tf_norm", "min_tf_norm"]
+        )
+    terms = _fetch_terms(occ, excl_map)
+    buckets = sorted({spark_pmod_bucket(t, ix.num_term_buckets) for t in terms})
 
     # DIRECT route (default where eligible): shard-clustered posting
     # files let each kernel task pyarrow-read exactly its shard — no
@@ -2791,253 +2248,120 @@ def index_search(
             else f"subsplit={subsplit} requests the exchange kernel"
         )
         raise ValueError(f"direct=True is not serviceable: {why}")
+    sub_shift = None
+    group_key = "shard_id"
+    if not (use_direct or use_side_direct):
+        # blockmax keeps n_sub = 1 by default, kept from the measurement
+        # that set it (20-query blockmax 2.34 s at n=1 vs 2.71 s at n=4
+        # on local[8]): finer groups multiply the per-group fixed cost;
+        # explicit subsplit still applies to both strategies
+        n_sub = (
+            subsplit
+            if subsplit is not None
+            else 1
+            if strategy == "blockmax"
+            else _auto_subsplit(
+                ix, spark.sparkContext.defaultParallelism, len(queries)
+            )
+        )
+        if n_sub < 1 or (n_sub & (n_sub - 1)):
+            raise ValueError(
+                f"subsplit must be a power of two >= 1, got {n_sub}"
+            )
+        n_sub = min(n_sub, 1 << ix.shard_shift)
+        blocks = (
+            ix.postings()
+            .filter(F.col("term_bucket").isin(buckets))
+            .filter(F.col("term").isin(terms))
+            .select("shard_id", *cols,
+                    # the sub-range explode reads the block's doc range
+                    *[c for c in ("first_doc", "last_doc") if c not in cols],
+                    # per-group tombstone masking needs each block's
+                    # lineage seq (codecs.dead_mask)
+                    *([ix.gseq_col().alias("gseq")] if n_del else []))
+        )
+        if n_sub > 1:
+            sub_shift = ix.shard_shift - (n_sub.bit_length() - 1)
+            # replicate each block to every sub-range it overlaps (a dense
+            # block spans ~block_size ids, a sub-range >= 4*block_size, so
+            # the straddle fraction is a few %); the kernel masks decoded
+            # ids to its range, so each doc is scored exactly once
+            blocks = blocks.withColumn(
+                "vshard",
+                F.explode(
+                    F.sequence(
+                        F.shiftright("first_doc", sub_shift),
+                        F.shiftright("last_doc", sub_shift),
+                    )
+                ),
+            )
+            group_key = "vshard"
+        if prune is None:
+            blocks = blocks.drop("first_doc", "last_doc")
+    cogroup = _needs_side or use_cotomb
+    kern = _sharded_topk_fn(
+        occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
+        cogroup=cogroup, has_qual=_needs_side, tombstones=tomb,
+        and_need=and_need, exclude=excl_map, fieldw=fw,
+        after=search_after, collapse=collapse is not None,
+        prune_bounds=prune,
+    )
     if use_direct:
         return _direct_search(
-            ix, weights, occ, eff_k1, eff_b, k, tomb,
-            strategy=strategy, derived=derived, and_need=and_need,
-            exclude=excl_map, fieldw=fw, eff_avgdl=eff_avgdl,
-            after=search_after,
+            ix, kern, occ, terms, buckets, cols, k, tomb,
             # an EXPLICIT direct=True asks for the distributed
             # no-exchange plan (plan-contract callers); only the
             # auto route may serve driver-side
             allow_local=direct is None,
         )
-    if use_side_direct:
-        terms = _fetch_terms(weights, excl_map)
-        buckets = sorted(
-            {spark_pmod_bucket(t, ix.num_term_buckets) for t in terms}
-        )
-        cols = ["term", "n_docs", "docs_vbyte", "tfs_vbyte",
-                "dls_vbyte"]
-        if fw is not None:
-            cols.append("pos_vbyte")
-        if strategy == "blockmax":
-            cols += ["first_doc", "last_doc"]
-            cols += (
-                ["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-                else ["max_tf_norm", "min_tf_norm"]
-            )
-        val_cols = (
-            [F.col(collapse).cast("string").alias("value")]
-            if collapse is not None else []
-        )
-        sides = [
-            filtered_live_stats(ix, where, where_expr).select(
-                "doc_id",
-                F.shiftright("doc_id", ix.shard_shift)
-                .alias("shard_id"),
-                F.lit(0).alias("kind"),
-                F.lit(0).cast("long").alias("seq"),
-                *val_cols,
-            )
-        ]
-        if use_cotomb:
-            sides.append(ix.tombstones_df().select(
-                "doc_id",
-                F.shiftright("doc_id", ix.shard_shift)
-                .alias("shard_id"),
-                F.lit(1).alias("kind"),
-                F.col("del_seq").alias("seq"),
-                *(
-                    [F.lit(None).cast("string").alias("value")]
-                    if collapse is not None else []
-                ),
-            ))
-        side = (
-            sides[0] if len(sides) == 1
-            else sides[0].unionByName(sides[1])
-        )
-        if strategy == "blockmax" and not excl_map and fw is None:
-            # filtered search on the pruned path: the qualifying ids
-            # arrive as the cogrouped side, so the seed theta masks
-            # to them exactly (_interval_prune tomb/qual doc)
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, None,
-                cogroup=True, has_qual=True, tombstones=tomb,
-                and_need=and_need,
-                prune_bounds="derived" if derived else "stored",
-            )
-        elif strategy == "blockmax":
-            kern = _wand_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, None,
-                derived_bounds=derived, cogroup=True, has_qual=True,
-                tombstones=tomb, and_need=and_need, exclude=excl_map,
-                fieldw=fw,
-            )
-        else:
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, None,
-                cogroup=True, has_qual=True, tombstones=tomb,
-                and_need=and_need, exclude=excl_map, fieldw=fw,
-                after=search_after, collapse=collapse is not None,
-            )
-        shard_tops = side.groupBy("shard_id").applyInPandas(
-            _direct_side_fn(kern, cols, terms,
-                            ix.shard_file_map(buckets),
-                            need_gseq=bool(n_del)),
-            schema=(
-                "query_id int, doc_id long, score double"
-                + (", value string" if collapse is not None else "")
-            ),
-        )
-        if collapse is not None:
-            return _collapse_window(shard_tops, k)
-        return topk_window(shard_tops, k)
-    # auto-split only the dense sharded kernel: WAND's block pruning
-    # already bounds its per-group work, and finer groups just multiply
-    # its per-group fixed cost (measured: 20-query blockmax 2.34 s at
-    # n=1 vs 2.71 s at n=4 on local[8]); explicit subsplit still
-    # applies to both
-    n_sub = (
-        subsplit
-        if subsplit is not None
-        else 1
-        if strategy == "blockmax"
-        else _auto_subsplit(
-            ix, spark.sparkContext.defaultParallelism, len(queries)
-        )
+    schema = "query_id int, doc_id long, score double" + (
+        ", value string" if collapse is not None else ""
     )
-    if n_sub < 1 or (n_sub & (n_sub - 1)):
-        raise ValueError(f"subsplit must be a power of two >= 1, got {n_sub}")
-    n_sub = min(n_sub, 1 << ix.shard_shift)
-    meta_cols = (
-        ["first_doc", "last_doc"]
-        + (["max_tf", "min_tf", "min_dl", "max_dl"] if derived
-           else ["max_tf_norm", "min_tf_norm"])
-        if strategy == "blockmax"
-        else []
-    )
-    terms = _fetch_terms(weights, excl_map)
-    buckets = sorted({spark_pmod_bucket(t, ix.num_term_buckets) for t in terms})
-    blocks = (
-        ix.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("term", "shard_id", "n_docs",
-                "first_doc", "last_doc",
-                *[c for c in meta_cols if c not in
-                  ("first_doc", "last_doc")],
-                "docs_vbyte", "tfs_vbyte", "dls_vbyte",
-                # field-weighted scoring reads the positions stream
-                *(["pos_vbyte"] if fw is not None else []),
-                # per-group tombstone masking needs each block's
-                # lineage seq (codecs.dead_mask)
-                *([ix.gseq_col().alias("gseq")] if n_del else []))
-    )
-    if n_sub > 1:
-        sub_shift = ix.shard_shift - (n_sub.bit_length() - 1)
-        # replicate each block to every sub-range it overlaps (a dense
-        # block spans ~block_size ids, a sub-range >= 4*block_size, so
-        # the straddle fraction is a few %); the kernel masks decoded
-        # ids to its range, so each doc is scored exactly once
-        blocks = blocks.withColumn(
-            "vshard",
-            F.explode(
-                F.sequence(
-                    F.shiftright("first_doc", sub_shift),
-                    F.shiftright("last_doc", sub_shift),
-                )
-            ),
-        )
-        group_key = "vshard"
-    else:
-        sub_shift = None
-        group_key = "shard_id"
-    if strategy != "blockmax":
-        blocks = blocks.drop("first_doc", "last_doc")
-    has_qual = (
-        bool(where) or where_expr is not None or collapse is not None
-    )
-    if has_qual or use_cotomb:
-        key_shift = sub_shift if sub_shift is not None else ix.shard_shift
-        val_cols = (
-            [F.col(collapse).cast("string").alias("value")]
-            if collapse is not None else []
-        )
-        sides = []
-        if has_qual:
-            qual = filtered_live_stats(ix, where, where_expr)
-            # co-partition qualifying ids on the SAME doc-range key as
-            # the blocks: a doc's group key is unique (no replication)
-            sides.append(qual.select(
-                "doc_id",
-                F.shiftright("doc_id", key_shift).alias(group_key),
-                F.lit(0).alias("kind"),
-                F.lit(0).cast("long").alias("seq"),
-                *val_cols,
-            ))
-        if use_cotomb:
-            # distributed tombstones: same co-partitioning, kind=1
-            sides.append(ix.tombstones_df().select(
-                "doc_id",
-                F.shiftright("doc_id", key_shift).alias(group_key),
-                F.lit(1).alias("kind"),
-                F.col("del_seq").alias("seq"),
-                *(
-                    [F.lit(None).cast("string").alias("value")]
-                    if collapse is not None else []
-                ),
-            ))
-        side = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
-        if strategy == "blockmax" and not excl_map and fw is None:
-            # pruned path with cogrouped masks (where= and/or
-            # distributed tombstones): seed theta masks exactly
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                cogroup=True, has_qual=has_qual, tombstones=tomb,
-                and_need=and_need,
-                prune_bounds="derived" if derived else "stored",
-            )
-        elif strategy == "blockmax":
-            kern = _wand_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                derived_bounds=derived, cogroup=True,
-                has_qual=has_qual, tombstones=tomb,
-                and_need=and_need, exclude=excl_map, fieldw=fw,
-            )
-        else:
-            kern = _sharded_topk_fn(
-                occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-                cogroup=True, has_qual=has_qual, tombstones=tomb,
-                and_need=and_need, exclude=excl_map, fieldw=fw,
-                after=search_after, collapse=collapse is not None,
-            )
-        shard_tops = (
-            blocks.groupBy(group_key)
-            .cogroup(side.groupBy(group_key))
-            .applyInPandas(
-                kern,
-                schema=(
-                    "query_id int, doc_id long, score double"
-                    + (", value string" if collapse is not None
-                       else "")
-                ),
-            )
-        )
-        if collapse is not None:
-            return _collapse_window(shard_tops, k)
-        return topk_window(shard_tops, k)
-    if strategy == "blockmax" and not excl_map and fw is None:
-        # same interval-pruned dense kernel as the direct route
-        # (conjunctive + tombstoned shapes included)
-        kern = _sharded_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-            prune_bounds="derived" if derived else "stored",
-            and_need=and_need, tombstones=tomb,
-        )
-    elif strategy == "blockmax":
-        kern = _wand_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-            derived_bounds=derived, tombstones=tomb,
-            and_need=and_need, exclude=excl_map, fieldw=fw,
+    if not cogroup:
+        shard_tops = blocks.groupBy(group_key).applyInPandas(
+            kern, schema=schema
         )
     else:
-        kern = _sharded_topk_fn(
-            occ, eff_k1, eff_b, eff_avgdl, k, sub_shift,
-            tombstones=tomb, and_need=and_need, exclude=excl_map,
-            fieldw=fw, after=search_after,
-        )
-    shard_tops = blocks.groupBy(group_key).applyInPandas(
-        kern, schema="query_id int, doc_id long, score double"
-    )
+        # the kind-tagged side (_parse_side): qualifying ids (kind=0,
+        # carrying the collapse value) and distributed tombstones
+        # (kind=1), co-partitioned on the blocks' doc-range group key —
+        # a doc's key is unique, so side rows never replicate
+        key_shift = ix.shard_shift if sub_shift is None else sub_shift
+        parts = []
+        if _needs_side:
+            parts.append((
+                filtered_live_stats(ix, where, where_expr), 0,
+                F.lit(0).cast("long"),
+                F.col(collapse) if collapse is not None else None,
+            ))
+        if use_cotomb:
+            parts.append((ix.tombstones_df(), 1, F.col("del_seq"), F.lit(None)))
+        side = reduce(DataFrame.unionByName, (
+            src.select(
+                "doc_id",
+                F.shiftright("doc_id", key_shift).alias(group_key),
+                F.lit(kind).alias("kind"),
+                seq.alias("seq"),
+                *(
+                    [val.cast("string").alias("value")]
+                    if collapse is not None else []
+                ),
+            )
+            for src, kind, seq, val in parts
+        ))
+        if use_side_direct:
+            shard_tops = side.groupBy(group_key).applyInPandas(
+                _direct_side_fn(kern, cols, terms,
+                                ix.shard_file_map(buckets),
+                                need_gseq=bool(n_del)),
+                schema=schema,
+            )
+        else:
+            shard_tops = (
+                blocks.groupBy(group_key)
+                .cogroup(side.groupBy(group_key))
+                .applyInPandas(kern, schema=schema)
+            )
+    if collapse is not None:
+        return _collapse_window(shard_tops, k)
     return topk_window(shard_tops, k)

@@ -177,10 +177,10 @@ def test_indexed_bm25f_refusals(spark, f_built, tmp_path):
 
 
 def test_indexed_bm25f_blockmax_bit_identical(spark, f_built):
-    """r06: BM25F on the pruned strategy — bounds from the raw block
-    integers under the weight envelope (tf~ <= wmax*max_tf,
-    dl~ >= wmin*min_dl) — must match the sharded kernel bit-for-bit on
-    both routes, composing with overrides and boolean surfaces."""
+    """BM25F on strategy='blockmax' — which runs field-weighted queries
+    unpruned, since sound bounds would need the positional split — must
+    match 'sharded' bit-for-bit on both routes, composing with overrides
+    and boolean surfaces."""
     from sparkbm25.index_query import index_bm25f_search
     from sparkbm25.jobs import Index
 

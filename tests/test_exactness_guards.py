@@ -4,13 +4,15 @@
   instead of wrapping once a stream passes 2**31 - 1 bytes;
 - ``localrel.local_df`` keeps nullable longs exact (no float64 detour);
 - the point path's parquet footer cache stays within its file cap on a
-  long-lived handle while results stay exact.
+  long-lived handle while results stay exact;
+- ``build.StageTimer`` times stages on a monotonic clock, so a wall-clock
+  step cannot record a negative stage time in the manifest.
 """
 
 import numpy as np
 import pytest
 
-from sparkbm25.build import BuildParams, binary_from_segments
+from sparkbm25.build import BuildParams, StageTimer, binary_from_segments
 from sparkbm25.corpus import add_doc_id
 from sparkbm25.fixtures import make_transcripts_pdf
 from sparkbm25.jobs import Index, build_index
@@ -33,6 +35,18 @@ def test_binary_from_segments_refuses_int32_wrap():
             np.zeros(8, dtype=np.uint8), sizes,
             np.array([0, 2], dtype=np.int64),
         )
+
+
+def test_stage_timer_ignores_wall_clock_steps(monkeypatch):
+    import time
+
+    # the wall clock jumps back an hour inside the stage
+    wall = iter([1_000_000.0, 996_400.0])
+    monkeypatch.setattr(time, "time", lambda: next(wall))
+    timer = StageTimer()
+    with timer.time("stage"):
+        pass
+    assert 0.0 <= timer.stages["stage"] < 60.0
 
 
 def test_local_df_keeps_nullable_longs_exact(spark):

@@ -19,9 +19,11 @@ Contract pinned by these tests:
   real index's block metadata, not a synthetic frame);
 - on a bounds-hostile frame the analysis reports "nothing excludable"
   (None) so the caller pays zero per-query masking;
-- masked/boolean/field-weighted shapes refuse prune_bounds (their
-  theta bootstrap needs decode-time masking — they keep the WAND
-  kernel).
+- exclusion, field-weighted and search_after shapes refuse
+  prune_bounds (a partial decode cannot prove a MUST_NOT term absent,
+  field bounds would need the positional split, a cursor hides docs
+  theta counted) — index_search runs them through the same kernel
+  unpruned.
 
 Reference analog: pruning serves every search unconditionally in the
 reference harness (benchmarking/search/search_indices.py:16-20); the

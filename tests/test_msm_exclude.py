@@ -255,7 +255,9 @@ def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
     """min_match and exclude under the DISTRIBUTED tombstone path
     (n_deleted > TOMBSTONE_BROADCAST_MAX, forced to 1): tombstones
     cogroup as kind=1 side rows and must interact correctly with the
-    coverage count and the exclusion positions."""
+    coverage count and the exclusion positions — on both strategies
+    (blockmax prunes the min_match shape with a mask-exact seed θ and
+    runs the exclude shape unpruned)."""
     import sparkbm25.jobs as J
     from sparkbm25.jobs import delete_docs
 
@@ -268,16 +270,17 @@ def test_msm_exclude_distributed_tombstones(spark, corpus, tmp_path,
     ix = Index(spark, d)
     alive = set(all_ids) - set(victims)
     queries = make_queries(15)
-    want = oracle.search_all(queries, k=K, allowed=alive, min_match=2)
-    got = index_search(ix, queries, k=K, min_match=2,
-                       direct=False).collect()
-    _assert_rank_identical(got, want)
+    want_mm = oracle.search_all(queries, k=K, allowed=alive, min_match=2)
     excl = {qid: "w0006" for qid, text in queries
             if "w0006" not in text.split()}
-    want = oracle.search_all(queries, k=K, allowed=alive, exclude=excl)
-    got = index_search(ix, queries, k=K, exclude=excl,
-                       direct=False).collect()
-    _assert_rank_identical(got, want)
+    want_ex = oracle.search_all(queries, k=K, allowed=alive, exclude=excl)
+    for strategy in ("sharded", "blockmax"):
+        got = index_search(ix, queries, k=K, min_match=2,
+                           strategy=strategy, direct=False).collect()
+        _assert_rank_identical(got, want_mm)
+        got = index_search(ix, queries, k=K, exclude=excl,
+                           strategy=strategy, direct=False).collect()
+        _assert_rank_identical(got, want_ex)
 
 
 def test_exclude_composes_with_prefix_search(spark, built, oracle):
@@ -334,7 +337,8 @@ def test_exclude_rejects_exhaustive(spark, built):
 def test_msm_exclude_blockmax_rank_identical(spark, built, oracle):
     """min_match / exclude / their composition on strategy='blockmax'
     (direct AND exchange routes) must be bit-identical to 'sharded' —
-    same kernels' canonical fold, pruned candidate generation."""
+    one kernel, one canonical fold: min_match runs interval-pruned,
+    exclude runs unpruned."""
     ix = Index(spark, built)
     queries = make_queries(30)
     ex = {qid: queries[(i + 5) % len(queries)][1].split()[0]

@@ -143,8 +143,8 @@ def test_cosine_pairs_plan_single_shuffle(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_wand_plan_one_kernel_two_exchanges(built):
-    """The block-max WAND strategy's EXCHANGE route keeps the sharded
+def test_blockmax_exchange_plan_one_kernel_two_exchanges(built):
+    """The blockmax strategy's EXCHANGE route keeps the sharded
     path's plan shape: exactly one shard-grouped kernel
     (FlatMapGroupsInPandas) and two exchanges total (shard groupBy +
     final skinny top-k window) — the legacy DataFrame 3-phase plan this

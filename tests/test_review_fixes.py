@@ -71,8 +71,8 @@ def test_stream_growth_keeps_idf_positive_and_blockmax_sound(spark, tmp_path):
 
     from sparkbm25.index_query import _query_weights
 
-    weights, _ = _query_weights(ix, [(0, "zz w3")])
-    assert all(row[2] > 0 for row in weights)  # df=50 <= N=50
+    occ = _query_weights(ix, [(0, "zz w3")])
+    assert all(w > 0 for tw in occ.values() for _, w in tw)  # df=50 <= N=50
 
     queries = [(0, "zz"), (1, "zz w3"), (2, "extra2 base1")]
     # independent reference: the oracle over every doc, pinned to the

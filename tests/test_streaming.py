@@ -738,8 +738,8 @@ def test_distributed_tombstone_masking(spark, corpora, tmp_path, monkeypatch):
         for r in index_search(ix2, queries, k=10).collect()
     )
     assert got_dist == want
-    # blockmax over the distributed-tombstone cogroup side (WAND kernel
-    # with live-count bootstrap) must agree too
+    # blockmax over the distributed-tombstone cogroup side (interval
+    # pruning with a mask-exact seed θ) must agree too
     got_bm = sorted(
         (r.query_id, r.rank, r.doc_id)
         for r in index_search(ix2, queries, k=10,
